@@ -100,14 +100,12 @@ object Bench {
     // query count.
     System.err.println(s"[bench] full detail: ${toJson(results)}")
     try {
-      val w = new java.io.PrintWriter("/root/repo/BENCH_DETAIL.json")
+      val w = new java.io.PrintWriter("BENCH_DETAIL.json")
       // errors: per-failed-query exception text — a -1.000 sentinel
       // without its cause is undiagnosable from the artifact alone
       // (round 9 shipped 12 bare sentinels).
-      def jstr(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      def jstr(s: String): String = json.writeValueAsString(s)
       val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
         .mkString("{", ",", "}")
       try w.println(s"""{"total":${fmt(total)},"n_failed":${errors.size},"errors":$errJson,"queries":${toJson(results)},"sf":"$sfDir"}""")

@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,6 +22,30 @@ import org.apache.spark.sql.functions._
   *   path/_log/chk-v00000010.json consolidated live-set checkpoint
   *   path/data/<uuid>/...         immutable parquet file groups
   * }}}
+  *
+  * Log format: every `_log/` file is one JSON object, read and
+  * written by Jackson (`encode` / `decode`), so no name or
+  * expression has reserved characters:
+  * {{{
+  *   {"version":7,"op":"merge_dv","batch":3,
+  *    "ren":[["phys","logical"]],"drop":["c"],"chk":[["name","expr"]],
+  *    "replace":true,
+  *    "groups":["<uuid>"],"lo":[1],"hi":[9],"dvs":[null],
+  *    "xs":[[["col",0,42]]],"rows":[100]}
+  * }}}
+  * Group fields are parallel arrays, one slot per group. `op`,
+  * `batch` and the schema triple (`ren`/`drop`/`chk`) are present only
+  * when set; checkpoints carry no `op`/`batch` and the schema triple
+  * only when non-empty. The decoder also reads the older
+  * string forms (`"phys>logical"`, `"name>expr"`, `"col:lo:hi|…"`) and
+  * entries lacking `dvs`/`xs`/`rows`/`op`, so logs written before the
+  * array forms stay readable.
+  *
+  * Snapshots: every verb lists `_log/` ONCE and folds one [[Snapshot]]
+  * (version, live groups, schema state) from the newest checkpoint at
+  * or below the requested version plus the entries after it; gates,
+  * reads and the commit itself all use that one snapshot, so a verb
+  * can never mix two heads.
   *
   * Protocol (the Delta idea, minimum viable form):
   *  - a commit = write the data files to a fresh uuid dir (invisible
@@ -101,7 +131,9 @@ object VersionedTable {
     * columns record exact bounds, decimal/floating columns record
     * floor(min)/ceil(max) (conservative under the long-typed bounds
     * walker). Write pruning (mergePruned/deleteRange) stays keyed on
-    * (lo, hi). */
+    * (lo, hi). `rows` is the group's physical row count, observed at
+    * stage time, so later verbs (empty checks, mergeDv's density
+    * bound) never re-count the parquet. */
   final case class Group(name: String, lo: Option[Long], hi: Option[Long],
       dv: Option[String] = None,
       xs: Seq[(String, Long, Long)] = Seq.empty,
@@ -111,9 +143,6 @@ object VersionedTable {
     * columns (Delta defaults to 32; the tiny-JSON log keeps this
     * smaller). */
   val MaxStatsColumns = 8
-
-  private case class Entry(version: Long, groups: Seq[Group],
-      replace: Boolean)
 
   /** Column-mapping state — the metadata that makes RENAME/DROP
     * COLUMN zero-rewrite operations (the Delta columnMapping idea,
@@ -147,105 +176,129 @@ object VersionedTable {
   }
   val EmptySchemaState: SchemaState = SchemaState(Seq.empty, Seq.empty)
 
-  // ---- tiny JSON (de)serializers for the fixed log shapes ----------
+  /** One decoded log file. A commit entry always carries `replace`;
+    * a checkpoint does not and decodes as `replace = true` (it IS the
+    * whole live set). `schema` is set only when the file carries the
+    * schema fields — latest-wins, like the live set. */
+  private case class Entry(version: Long, groups: Seq[Group],
+      replace: Boolean, op: Option[String] = None,
+      batch: Option[Long] = None, schema: Option[SchemaState] = None)
 
-  private def schemaJson(st: SchemaState): String = {
-    val ren = st.renames.map { case (p, l) => s""""$p>$l"""" }
-      .mkString("[", ",", "]")
-    val drop = st.drops.map(d => s""""$d"""").mkString("[", ",", "]")
-    val chk = st.checks.map { case (n, e) => s""""$n>$e"""" }
-      .mkString("[", ",", "]")
-    s""""ren":$ren,"drop":$drop,"chk":$chk"""
+  /** One consistent view of the table: the version, its live groups
+    * and its schema state, all folded from ONE `_log/` listing. Every
+    * verb resolves one snapshot and uses it for its gates, its reads
+    * and its commit, so no verb can mix two heads. */
+  private[graft] final case class Snapshot(version: Long,
+      groups: Seq[Group], schema: SchemaState) {
+    /** The snapshot after `e` is applied on top of this one. */
+    private[sources] def fold(e: Entry): Snapshot = Snapshot(e.version,
+      if (e.replace) e.groups else groups ++ e.groups,
+      e.schema.getOrElse(schema))
   }
 
-  private def parseSchema(raw: String): Option[SchemaState] =
-    if (!raw.contains("\"ren\":")) None
-    else Some(SchemaState(
-      arrayBody(raw, "ren").map(_.stripPrefix("\"").stripSuffix("\""))
-        .map { s =>
-          val i = s.indexOf('>')
-          (s.substring(0, i), s.substring(i + 1))
-        },
-      arrayBody(raw, "drop")
-        .map(_.stripPrefix("\"").stripSuffix("\"")),
-      if (!raw.contains("\"chk\":[")) Seq.empty
-      else arrayBody(raw, "chk")
-        .map(_.stripPrefix("\"").stripSuffix("\""))
-        .map { s =>
-          val i = s.indexOf('>')
-          (s.substring(0, i), s.substring(i + 1))
-        }))
+  private val Json = JsonMapper.builder().addModule(DefaultScalaModule).build()
 
-  private def groupsJson(gs: Seq[Group]): String = {
-    val names = gs.map(g => s""""${g.name}"""").mkString("[", ",", "]")
-    val lo = gs.map(_.lo.map(_.toString).getOrElse("null"))
-      .mkString("[", ",", "]")
-    val hi = gs.map(_.hi.map(_.toString).getOrElse("null"))
-      .mkString("[", ",", "]")
-    val dvs = gs.map(_.dv.map(d => s""""$d"""").getOrElse("null"))
-      .mkString("[", ",", "]")
-    // per-group extra column stats flattened as "c:lo:hi|c2:lo:hi"
-    // (one string per group, no nested arrays — the tiny split-based
-    // parser's grammar; stats-eligible column names are gated free of
-    // the : | separators and the log's reserved , " ] characters)
-    val xs = gs.map(g => "\"" + g.xs.map { case (c, l, h) =>
-      s"$c:$l:$h" }.mkString("|") + "\"").mkString("[", ",", "]")
-    // per-group physical row count (round-16): known at stage time
-    // from the write's own observed metrics, so later verbs (empty
-    // checks, mergeDv's density bound) never re-count the parquet
-    val rows = gs.map(_.rows.map(_.toString).getOrElse("null"))
-      .mkString("[", ",", "]")
-    s""""groups":$names,"lo":$lo,"hi":$hi,"dvs":$dvs,"xs":$xs,"rows":$rows"""
+  /** The bytes of one log file (see the format in the object doc). */
+  private def encode(e: Entry): Array[Byte] = {
+    val gs = e.groups
+    val fields: Seq[(String, Any)] = Seq("version" -> e.version) ++
+      e.op.map("op" -> _) ++ e.batch.map("batch" -> _) ++
+      e.schema.toSeq.flatMap(st => Seq("ren" -> st.renames,
+        "drop" -> st.drops, "chk" -> st.checks)) ++
+      Seq("replace" -> e.replace, "groups" -> gs.map(_.name),
+        "lo" -> gs.map(_.lo), "hi" -> gs.map(_.hi), "dvs" -> gs.map(_.dv),
+        "xs" -> gs.map(_.xs), "rows" -> gs.map(_.rows))
+    Json.writeValueAsBytes(ListMap(fields: _*))
   }
 
-  private def arrayBody(raw: String, key: String): Seq[String] = {
-    val body = raw.split(s""""$key":\\[""")(1).split("\\]")(0).trim
-    if (body.isEmpty) Seq.empty else body.split(",").toSeq.map(_.trim)
+  /** Decode one log file. Absent fields read as empty/None; pairs and
+    * stats also accept their older string forms ("a>b", "c:lo:hi|…")
+    * so logs written before the array forms stay readable. */
+  private def decode(n: JsonNode): Entry = {
+    def arr(k: String): Seq[JsonNode] = n.path(k).elements().asScala.toSeq
+    def opt(k: String): Option[JsonNode] = Option(n.get(k)).filterNot(_.isNull)
+    def pair(x: JsonNode): (String, String) =
+      if (x.isArray) (x.get(0).asText, x.get(1).asText)
+      else {
+        val s = x.asText
+        val i = s.indexOf('>')
+        (s.take(i), s.drop(i + 1))
+      }
+    def stats(x: JsonNode): Seq[(String, Long, Long)] =
+      if (x.isArray) x.elements().asScala.map(t =>
+        (t.get(0).asText, t.get(1).asLong, t.get(2).asLong)).toSeq
+      else x.asText.split('|').toSeq.filter(_.nonEmpty).map { t =>
+        val p = t.split(':')
+        (p(0), p(1).toLong, p(2).toLong)
+      }
+    val Seq(lo, hi, dvs, xs, rows) =
+      Seq("lo", "hi", "dvs", "xs", "rows").map(arr)
+    def at(a: Seq[JsonNode], i: Int) = a.lift(i).filterNot(_.isNull)
+    Entry(n.get("version").asLong,
+      arr("groups").zipWithIndex.map { case (g, i) =>
+        Group(g.asText, at(lo, i).map(_.asLong), at(hi, i).map(_.asLong),
+          at(dvs, i).map(_.asText), at(xs, i).map(stats).getOrElse(Nil),
+          at(rows, i).map(_.asLong))
+      },
+      n.path("replace").asBoolean(true),
+      opt("op").map(_.asText), opt("batch").map(_.asLong),
+      if (!n.has("ren")) None
+      else Some(SchemaState(arr("ren").map(pair), arr("drop").map(_.asText),
+        arr("chk").map(pair))))
   }
 
-  private def parseGroups(raw: String): Seq[Group] = {
-    val names = arrayBody(raw, "groups")
-      .map(_.stripPrefix("\"").stripSuffix("\""))
-    val lo = arrayBody(raw, "lo")
-      .map(s => if (s == "null") None else Some(s.toLong))
-    val hi = arrayBody(raw, "hi")
-      .map(s => if (s == "null") None else Some(s.toLong))
-    // older entries predate the "dvs" field: all-None then
-    val dvs: Seq[Option[String]] =
-      if (!raw.contains("\"dvs\":[")) Seq.empty
-      else arrayBody(raw, "dvs").map(s =>
-        if (s == "null") None
-        else Some(s.stripPrefix("\"").stripSuffix("\"")))
-    // older entries predate the "xs" field too: all-empty then
-    val xs: Seq[Seq[(String, Long, Long)]] =
-      if (!raw.contains("\"xs\":[")) Seq.empty
-      else arrayBody(raw, "xs")
-        .map(_.stripPrefix("\"").stripSuffix("\""))
-        .map { s =>
-          if (s.isEmpty) Seq.empty[(String, Long, Long)]
-          else s.split("\\|").toSeq.map { t =>
-            val p = t.split(":")
-            (p(0), p(1).toLong, p(2).toLong)
-          }
-        }
-    // older entries predate the "rows" field: all-None then
-    val rows: Seq[Option[Long]] =
-      if (!raw.contains("\"rows\":[")) Seq.empty
-      else arrayBody(raw, "rows").map(s =>
-        if (s == "null") None else Some(s.toLong))
-    names.indices.map(i => Group(names(i),
-      lo.lift(i).flatten, hi.lift(i).flatten, dvs.lift(i).flatten,
-      xs.lift(i).getOrElse(Seq.empty), rows.lift(i).flatten))
-  }
-
-  private def jsonField(raw: String, k: String): String =
-    raw.split(s""""$k":""")(1).split("[,}\\]]")(0).trim
-
-  private def readJson(f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
+  private def readEntry(f: FileSystem, p: Path): Entry = {
     val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    try decode(Json.readTree(in)) finally in.close()
   }
+
+  private def entryPath(path: String, v: Long) =
+    new Path(logDir(path), f"v$v%08d.json")
+
+  private def chkPath(path: String, v: Long) =
+    new Path(logDir(path), f"chk-v$v%08d.json")
+
+  /** One listing of `_log/`: commit entries with their file status
+    * (for mtimes) and checkpoint versions, both ascending. */
+  private final case class LogFiles(entries: Seq[(Long, FileStatus)],
+      checkpoints: Seq[Long]) {
+    def head: Long = entries.lastOption.fold(0L)(_._1)
+  }
+
+  /** The ONE place `_log/` is listed and its file names parsed. */
+  private def listLog(spark: SparkSession, path: String): LogFiles = {
+    val files =
+      try fs(spark, path).listStatus(new Path(logDir(path))).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    def versions(prefix: String) = files.flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(prefix) && n.endsWith(".json"))
+        Some(n.stripPrefix(prefix).stripSuffix(".json").toLong -> st)
+      else None
+    }.sortBy(_._1)
+    LogFiles(versions("v"), versions("chk-v").map(_._1))
+  }
+
+  /** The snapshot at `asOf` (None = head) from an existing listing:
+    * the newest checkpoint ≤ `asOf`, then each later entry opened once
+    * — O(commits since checkpoint) files, not O(commits). */
+  private def snapshotOf(spark: SparkSession, path: String, log: LogFiles,
+      asOf: Option[Long]): Snapshot = {
+    val f = fs(spark, path)
+    val upTo = asOf.getOrElse(Long.MaxValue)
+    val chk = log.checkpoints.filter(_ <= upTo).lastOption
+    val from = chk.getOrElse(0L)
+    (chk.map(chkPath(path, _)) ++ log.entries.collect {
+      case (v, st) if v > from && v <= upTo => st.getPath
+    }).foldLeft(Snapshot(0L, Seq.empty, EmptySchemaState)) { (s, p) =>
+      s.fold(readEntry(f, p))
+    }
+  }
+
+  /** The snapshot at `asOf` (None = head): one `_log/` listing. */
+  private[graft] def snapshot(spark: SparkSession, path: String,
+      asOf: Option[Long] = None): Snapshot =
+    snapshotOf(spark, path, listLog(spark, path), asOf)
 
   /** The EARLIEST version a read/diff can still faithfully resolve
     * after retention ([[expireVersions]]): 0 while the full log is
@@ -256,106 +309,74 @@ object VersionedTable {
     * since" and, worse, MISS interim deletes. [[graft.streaming
     * .CdfTail]] refuses offsets behind this horizon. */
   def earliestResolvable(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return 0L
-    val names = f.listStatus(d).map(_.getPath.getName).toSeq
-    val entries = names
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-    if (entries.isEmpty || entries.min == 1L) return 0L
-    val chks = names
-      .filter(n => n.startsWith("chk-v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("chk-v").stripSuffix(".json").toLong)
-      .filter(_ < entries.min)
+    val log = listLog(spark, path)
+    val oldest = log.entries.headOption.fold(1L)(_._1)
+    if (oldest == 1L) return 0L
+    val chks = log.checkpoints.filter(_ < oldest)
     require(chks.nonEmpty,
-      s"log at $path is truncated below v${entries.min} with no " +
+      s"log at $path is truncated below v$oldest with no " +
         "covering checkpoint — unreadable history")
     chks.max
   }
 
   /** Latest committed version, or 0 when the table is empty. */
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) 0L
-    else f.listStatus(d).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .foldLeft(0L)(math.max)
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    listLog(spark, path).head
 
-  /** Atomic create-if-absent publish of `payload` at `entry` through
-    * the given [[CommitArbiter]] binding. False on a lost race. */
-  private def publishExclusive(f: org.apache.hadoop.fs.FileSystem,
-      entry: Path, payload: Array[Byte],
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter)
-      : Boolean =
-    arbiterFor(f).publish(f, entry, payload)
-
-  /** Publish a log entry for `groups` as version `expected + 1`;
+  /** Publish a log entry for `groups` as version `base.version + 1`;
     * cleans up `staged` (the groups THIS writer wrote, not the
-    * carried ones) and throws on a lost race. `batchId` (optional)
-    * tags the entry with a streaming micro-batch id — the idempotence
-    * token [[graft.streaming.VersionedSink]] deduplicates retried
-    * batches on. */
-  private[graft] def commitEntry(spark: SparkSession, path: String,
-      groups: Seq[Group], expected: Long, replace: Boolean,
+    * carried ones) and throws on a lost race. `base` is the snapshot
+    * the writer read: a boundary checkpoint folds the new entry onto
+    * it instead of re-reading the log. `batchId` (optional) tags the
+    * entry with a streaming micro-batch id — the idempotence token
+    * [[graft.streaming.VersionedSink]] deduplicates retried batches
+    * on. `arbiterFor` is the atomic create-if-absent seam
+    * ([[CommitArbiter]]). */
+  private def commitEntry(spark: SparkSession, path: String,
+      base: Snapshot, groups: Seq[Group], replace: Boolean,
       staged: Seq[String], batchId: Option[Long] = None,
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs,
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
       schema: Option[SchemaState] = None,
       op: Option[String] = None): Long = {
-    val next = expected + 1
+    val entry = Entry(base.version + 1, groups, replace, op, batchId, schema)
     val f = fs(spark, path)
-    f.mkdirs(new Path(logDir(path)))
-    val entry = new Path(logDir(path), f"v$next%08d.json")
-    val batchJs = batchId.map(b => s""""batch":$b,""").getOrElse("")
-    // operation tag for DESCRIBE HISTORY — internal fixed vocabulary,
-    // never user input (log-grammar safe by construction)
-    val opJs = op.map(o => s""""op":"$o",""").getOrElse("")
-    val schemaJs = schema.map(st => s"${schemaJson(st)},").getOrElse("")
-    val payload =
-      s"""{"version":$next,$opJs$batchJs$schemaJs"replace":$replace,${groupsJson(groups)}}"""
-    if (!publishExclusive(f, entry, payload.getBytes("UTF-8"), arbiterFor)) {
+    if (base.version == 0) f.mkdirs(new Path(logDir(path)))
+    if (!arbiterFor(f).publish(f, entryPath(path, entry.version),
+        encode(entry))) {
       staged.foreach(g => f.delete(new Path(s"$path/data/$g"), true))
-      throw new CommitConflictException(next)
+      throw new CommitConflictException(entry.version)
     }
     // the winner of a checkpoint-boundary version consolidates the
     // live set — derived, idempotent metadata (only one writer ever
-    // holds version `next`, so no same-name contention). Published
-    // via write-temp-then-RENAME, never create+write in place: with
-    // contended appends (commitAppendWithRetry) other writers read
-    // the log concurrently, and a reader catching the checkpoint
-    // between create and close would fold a TORN live set — rename is
-    // atomic on local/HDFS, so the name only ever points at complete
-    // bytes. A crash before rename leaves only a dot-prefixed temp
-    // (invisible to the chk-v listing).
-    if (next % CheckpointInterval == 0) {
-      val live = liveGroups(spark, path, Some(next))
-      val chk = new Path(logDir(path), f"chk-v$next%08d.json")
-      val tmp = new Path(logDir(path),
-        s".tmp-chk-${java.util.UUID.randomUUID()}")
-      // checkpoints carry the schema state too: after expiry they can
-      // be the ONLY record of a rename/drop
-      val st = schema.getOrElse(schemaStateAt(spark, path, Some(next)))
-      val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
-      val body = s"""{"version":$next,$stJs${groupsJson(live)}}"""
-      try {
-        val out = f.create(tmp, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-        f.rename(tmp, chk)
-      } finally {
-        if (f.exists(tmp)) f.delete(tmp, false)
-      }
-    }
-    next
+    // holds this version, so no same-name contention)
+    if (entry.version % CheckpointInterval == 0)
+      writeCheckpoint(f, path, base.fold(entry))
+    entry.version
   }
 
-  /** Stage `df` as a fresh uuid group; returns the group with key
-    * stats when `statsCol` names a long-castable column (one cheap
-    * min/max agg over the just-written parquet — columnar stats
-    * reads, no full materialization). */
+  /** Write `s` as the checkpoint of its version. Published via
+    * write-temp-then-RENAME, never create+write in place: with
+    * contended appends (commitAppendWithRetry) other writers read the
+    * log concurrently, and a reader catching the checkpoint between
+    * create and close would fold a TORN live set — rename is atomic on
+    * local/HDFS, so the name only ever points at complete bytes. A
+    * crash before rename leaves only a dot-prefixed temp (invisible to
+    * the chk-v listing). Checkpoints carry the schema state too: after
+    * expiry they can be the ONLY record of a rename/drop/check. */
+  private def writeCheckpoint(f: FileSystem, path: String,
+      s: Snapshot): Unit = {
+    val tmp = new Path(logDir(path),
+      s".tmp-chk-${java.util.UUID.randomUUID()}")
+    var published = false
+    try {
+      val out = f.create(tmp, true)
+      try out.write(encode(Entry(s.version, s.groups, replace = true,
+        schema = Some(s.schema).filterNot(_.isEmpty))))
+      finally out.close()
+      published = f.rename(tmp, chkPath(path, s.version))
+    } finally if (!published) f.delete(tmp, false)
+  }
+
   /** Write-side schema gate: a batch introducing columns the table
     * does not know is refused unless the caller passed
     * `allowEvolution = true` — otherwise a typo'd or mis-wired
@@ -365,17 +386,14 @@ object VersionedTable {
     * footer-level schema resolution of the live set per write; no-op
     * on an empty table. */
   private def requireKnownColumns(spark: SparkSession, path: String,
-      df: DataFrame, allowEvolution: Boolean): Unit = {
-    if (allowEvolution) return
-    val live = liveGroups(spark, path, None)
-    if (live.isEmpty) return
+      snap: Snapshot, df: DataFrame, allowEvolution: Boolean): Unit = {
+    if (allowEvolution || snap.groups.isEmpty) return
     // best-effort guard: if the live set cannot be schema-resolved
     // right now (e.g. a concurrent writer's group not yet visible),
     // do not block the commit — the conflict/read paths surface real
     // problems; this gate only exists to catch mis-schema'd batches
     val known = scala.util.Try(
-      readGroups(spark, path, live,
-        schemaStateAt(spark, path, None)).get.schema.fieldNames.toSet)
+      readSnapshot(spark, path, snap).get.schema.fieldNames.toSet)
       .getOrElse(return)
     val fresh = df.schema.fieldNames.filterNot(known)
     require(fresh.isEmpty,
@@ -394,10 +412,8 @@ object VersionedTable {
     * in the constrained column makes `pay >= 0` evaluate to NULL, and
     * letting that row through would contradict the resolve-failure
     * rule above — so the probe filters on NOT(expr) OR expr IS NULL. */
-  private def requireChecks(spark: SparkSession, path: String,
-      df: DataFrame): Unit = {
-    val st = schemaStateAt(spark, path, None)
-    st.checks.foreach { case (nm, ex) =>
+  private def requireChecks(snap: Snapshot, df: DataFrame): Unit =
+    snap.schema.checks.foreach { case (nm, ex) =>
       val bad = scala.util.Try(
         df.filter(s"NOT ($ex) OR ($ex) IS NULL").limit(1).collect())
       require(bad.isSuccess,
@@ -409,29 +425,23 @@ object VersionedTable {
         s"check constraint '$nm' ($ex) violated by this batch, " +
           s"e.g. ${bad.get.head}")
     }
-  }
 
   /** Add a named CHECK constraint (the Delta `ALTER TABLE ADD
     * CONSTRAINT` verb): a metadata-only commit riding the schema
     * state; every subsequent write batch must satisfy the expression
     * or is refused with the constraint named. Existing data is
     * validated FIRST — a constraint the table already violates is
-    * refused (Delta's rule). The tiny log format bounds the
-    * expression grammar: no commas, double quotes, or ']' (so no
-    * IN-lists); names additionally forbid '>'. */
+    * refused (Delta's rule). Any SQL expression works, IN-lists and
+    * string literals included: the log stores it as a JSON string. */
   def addCheck(spark: SparkSession, path: String, name: String,
       exprSql: String): Long = {
-    require(name.nonEmpty && !name.exists(c => ">,\"]".contains(c)),
-      s"constraint name must be free of > , \" ]: $name")
-    require(!exprSql.exists(c => ",\"]".contains(c)),
-      s"constraint expression must be free of , \" ] " +
-        s"(log-format limit): $exprSql")
-    val v = currentVersion(spark, path)
-    require(v >= 1, "addCheck on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
+    require(name.nonEmpty, "constraint name must be non-empty")
+    val snap = snapshot(spark, path)
+    require(snap.version >= 1, "addCheck on an empty table")
+    val st = snap.schema
     require(!st.checks.exists(_._1 == name),
       s"constraint '$name' already exists")
-    read(spark, path, Some(v)).foreach { df =>
+    readSnapshot(spark, path, snap).foreach { df =>
       // same non-true-is-a-violation semantics as the write gate
       require(df.filter(s"NOT ($exprSql) OR ($exprSql) IS NULL")
           .limit(1).isEmpty,
@@ -439,18 +449,18 @@ object VersionedTable {
           "table first (a constraint the table already breaks would " +
           "lie to every reader)")
     }
-    commitEntry(spark, path, liveGroups(spark, path, Some(v)), v,
+    commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("add_check"),
       schema = Some(st.copy(checks = st.checks :+ (name -> exprSql))))
   }
 
   /** Drop a CHECK constraint by name — metadata-only. */
   def dropCheck(spark: SparkSession, path: String, name: String): Long = {
-    val v = currentVersion(spark, path)
-    val st = schemaStateAt(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    val st = snap.schema
     require(st.checks.exists(_._1 == name),
       s"no such constraint: $name")
-    commitEntry(spark, path, liveGroups(spark, path, Some(v)), v,
+    commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("drop_check"),
       schema = Some(st.copy(checks = st.checks.filterNot(_._1 == name))))
   }
@@ -479,19 +489,15 @@ object VersionedTable {
     * bounds) or decimal with an integral part that FITS a long
     * (floor/ceil bounds — a wrapping decimal→long cast would break
     * the monotonicity pruning soundness rests on); float/double are
-    * excluded (NaN breaks min/max monotonicity). Names must avoid
-    * the log grammar's reserved characters and the ':'/'|' stats
-    * separators. */
+    * excluded (NaN breaks min/max monotonicity). */
   private def statsEligible(f: org.apache.spark.sql.types.StructField)
       : Boolean = {
     import org.apache.spark.sql.types._
-    f.name.nonEmpty &&
-      !f.name.exists(ch => ":|,\">]".contains(ch)) &&
-      (f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case d: DecimalType => d.precision - d.scale <= 18
-        case _ => false
-      })
+    f.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.precision - d.scale <= 18
+      case _ => false
+    }
   }
 
   /** Driver-side stats conversion: integral exact; decimal rounded
@@ -512,6 +518,10 @@ object VersionedTable {
       s"unexpected stats value type: ${other.getClass}")
   }
 
+  /** Stage `df` as a fresh uuid group; returns the group with key
+    * stats when `statsCol` names a long-castable column (one cheap
+    * min/max agg over the just-written parquet — columnar stats
+    * reads, no full materialization). */
   private def stageGroup(spark: SparkSession, path: String,
       df: DataFrame, statsCol: Option[String]): Group = {
     val name = java.util.UUID.randomUUID().toString
@@ -626,31 +636,48 @@ object VersionedTable {
     * the group's [min,max] of that column in the log — the file-stats
     * input [[mergePruned]] prunes on. Throws
     * [[CommitConflictException]] when another writer committed the
-    * same version first (the staged data group is cleaned up); any
-    * OTHER IO failure propagates unchanged and leaves the staged
-    * group as an orphan for [[vacuum]]. Returns the committed
-    * version. `validate = false` skips the CHECK-constraint gate —
-    * ONLY for internal rewrites of already-validated rows
-    * ([[merge]], [[optimize]]), where constraints hold by induction
-    * and re-probing would cost a full scan. */
+    * same version first (the staged data group is cleaned up, or
+    * never staged when the head had already moved past
+    * `expectedVersion`); any OTHER IO failure propagates unchanged
+    * and leaves the staged group as an orphan for [[vacuum]]. Returns
+    * the committed version. `validate = false` skips the
+    * CHECK-constraint gate — ONLY for internal rewrites of
+    * already-validated rows ([[merge]], [[optimize]]), where
+    * constraints hold by induction and re-probing would cost a full
+    * scan. */
   def commit(spark: SparkSession, path: String, df: DataFrame,
       expectedVersion: Long, replace: Boolean = false,
       statsCol: Option[String] = None,
       batchId: Option[Long] = None,
       allowEvolution: Boolean = false,
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs,
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
       validate: Boolean = true,
       op: Option[String] = None): Long = {
-    requireKnownColumns(spark, path, df, allowEvolution)
-    if (validate) requireChecks(spark, path, df)
+    val snap = snapshot(spark, path)
+    require(expectedVersion <= snap.version, s"expectedVersion " +
+      s"$expectedVersion is ahead of the head v${snap.version}")
+    if (expectedVersion < snap.version)
+      throw new CommitConflictException(expectedVersion + 1)
+    commitAt(spark, path, snap, df, replace, statsCol, batchId,
+      allowEvolution, arbiterFor, validate, op)
+  }
+
+  /** [[commit]] on top of an already-resolved snapshot: the gates read
+    * `snap` and the entry publishes as `snap.version + 1`. */
+  private def commitAt(spark: SparkSession, path: String, snap: Snapshot,
+      df: DataFrame, replace: Boolean, statsCol: Option[String],
+      batchId: Option[Long] = None, allowEvolution: Boolean = false,
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
+      validate: Boolean = true, op: Option[String] = None): Long = {
+    requireKnownColumns(spark, path, snap, df, allowEvolution)
+    if (validate) requireChecks(snap, df)
     val g = stageGroup(spark, path, df, statsCol)
     // append entries carry only the new group; a replace entry with
     // one group IS the whole new live set. `arbiterFor` is an
     // injection seam (default [[CommitArbiter.forFs]]): tests pin
     // protocol behavior under a deterministic lost race without
     // process-global mutable state.
-    commitEntry(spark, path, Seq(g), expectedVersion, replace,
+    commitEntry(spark, path, snap, Seq(g), replace,
       staged = Seq(g.name), batchId = batchId, arbiterFor = arbiterFor,
       op = op.orElse(Some(if (replace) "overwrite" else "append")))
   }
@@ -675,128 +702,65 @@ object VersionedTable {
       df: DataFrame, statsCol: Option[String] = None,
       batchId: Option[Long] = None,
       maxAttempts: Int = 64,
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
+      arbiterFor: FileSystem => CommitArbiter =
         CommitArbiter.forFs): (Long, Int) = {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    // gates are evaluated against the snapshot at `gatedAt`; a lost
-    // race re-validates below iff a schema-carrying commit (addCheck /
-    // rename / drop) landed in between — republishing verbatim would
-    // bypass a constraint the winning writer just added
-    var gatedAt = currentVersion(spark, path)
-    requireKnownColumns(spark, path, df, allowEvolution = false)
-    requireChecks(spark, path, df)
+    def gate(s: Snapshot): Unit = {
+      requireKnownColumns(spark, path, s, df, allowEvolution = false)
+      requireChecks(s, df)
+    }
+    def dropStaged(g: Group): Unit =
+      fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
+    // both gates read the snapshot the first publish is CAS'd against;
+    // a lost race re-gates on the fresh snapshot iff its schema state
+    // moved (addCheck / rename / drop landed in between) —
+    // republishing verbatim would bypass a constraint the winning
+    // writer just added
+    var snap = snapshot(spark, path)
+    gate(snap)
+    var gated = snap.schema
     val g = stageGroup(spark, path, df, statsCol)
     var conflicts = 0
     while (true) {
-      val v = currentVersion(spark, path)
       try {
-        if (v > gatedAt && schemaEntryBetween(spark, path, gatedAt, v)) {
-          // re-run both gates at the new head; a now-failing batch
-          // must clean its staged group and refuse, same as exhaustion
-          try {
-            requireKnownColumns(spark, path, df, allowEvolution = false)
-            requireChecks(spark, path, df)
-          } catch {
-            case t: Throwable =>
-              fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
-              throw t
-          }
-        }
-        if (v > gatedAt) gatedAt = v
         // staged = empty: a lost race must NOT clean the group — it
         // is re-published on the next attempt
-        return (commitEntry(spark, path, Seq(g), v, replace = false,
+        return (commitEntry(spark, path, snap, Seq(g), replace = false,
           staged = Seq.empty, batchId = batchId,
           arbiterFor = arbiterFor, op = Some("append")), conflicts)
       } catch {
         case e: CommitConflictException =>
           conflicts += 1
-          if (conflicts >= maxAttempts) {
-            fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
-            throw e
+          if (conflicts >= maxAttempts) { dropStaged(g); throw e }
+          snap = snapshot(spark, path)
+          if (snap.schema != gated) {
+            // a now-failing batch cleans its staged group and refuses,
+            // same as exhaustion
+            try gate(snap)
+            catch { case t: Throwable => dropStaged(g); throw t }
+            gated = snap.schema
           }
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
+  /** The head version and the `batch` tag of its entry, from ONE
+    * listing — the pair a streaming sink decides a retried
+    * micro-batch on. */
+  private[graft] def headBatch(spark: SparkSession,
+      path: String): (Long, Option[Long]) = {
+    val v = currentVersion(spark, path)
+    if (v == 0) (0L, None)
+    else (v, readEntry(fs(spark, path), entryPath(path, v)).batch)
+  }
+
   /** The `batch` tag of the HEAD log entry, if any — the token a
     * streaming sink checks to make a retried micro-batch a no-op
     * (Structured Streaming retries the LAST batch after a failure,
     * so head-entry inspection is the sufficient check). */
-  def headBatchId(spark: SparkSession, path: String): Option[Long] = {
-    val v = currentVersion(spark, path)
-    if (v == 0) return None
-    val f = fs(spark, logDir(path))
-    val raw = readJson(f, new Path(logDir(path), f"v$v%08d.json"))
-    if (!raw.contains("\"batch\":")) None
-    else Some(jsonField(raw, "batch").toLong)
-  }
-
-  /** The ordered live file groups (with stats) at `asOfVersion`
-    * (None = latest), starting from the newest checkpoint ≤ the
-    * requested version so the number of per-commit files OPENED is
-    * bounded by [[CheckpointInterval]], not table age. */
-  private def liveGroups(spark: SparkSession, path: String,
-      asOfVersion: Option[Long]): Seq[Group] = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return Seq.empty
-    val names = f.listStatus(d).map(_.getPath.getName).toSeq
-    val chk = names
-      .filter(n => n.startsWith("chk-v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("chk-v").stripSuffix(".json").toLong)
-      .filter(v => asOfVersion.forall(v <= _))
-      .sorted.lastOption
-    val base: Seq[Group] = chk match {
-      case Some(v) => parseGroups(readJson(f, new Path(d, f"chk-v$v%08d.json")))
-      case None => Seq.empty
-    }
-    val from = chk.getOrElse(0L)
-    val entries = names
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .filter(v => v > from && asOfVersion.forall(v <= _))
-      .sorted
-      .map { v =>
-        val raw = readJson(f, new Path(d, f"v$v%08d.json"))
-        Entry(v, parseGroups(raw), jsonField(raw, "replace").toBoolean)
-      }
-    entries.foldLeft(base) {
-      case (_, Entry(_, gs, true)) => gs
-      case (acc, Entry(_, gs, false)) => acc ++ gs
-    }
-  }
-
-  /** The column-mapping state in effect at `asOfVersion` (None =
-    * latest): base from the newest checkpoint ≤ the version, then the
-    * LATEST schema-carrying entry after it wins (full-snapshot
-    * semantics — same resolution walk as [[liveGroups]]). */
-  private[sources] def schemaStateAt(spark: SparkSession, path: String,
-      asOfVersion: Option[Long]): SchemaState = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return EmptySchemaState
-    val names = f.listStatus(d).map(_.getPath.getName).toSeq
-    val chk = names
-      .filter(n => n.startsWith("chk-v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("chk-v").stripSuffix(".json").toLong)
-      .filter(v => asOfVersion.forall(v <= _))
-      .sorted.lastOption
-    val base = chk
-      .flatMap(v => parseSchema(readJson(f, new Path(d, f"chk-v$v%08d.json"))))
-      .getOrElse(EmptySchemaState)
-    val from = chk.getOrElse(0L)
-    names
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .filter(v => v > from && asOfVersion.forall(v <= _))
-      .sorted
-      .foldLeft(base) { (acc, v) =>
-        parseSchema(readJson(f, new Path(d, f"v$v%08d.json")))
-          .getOrElse(acc)
-      }
-  }
+  def headBatchId(spark: SparkSession, path: String): Option[Long] =
+    headBatch(spark, path)._2
 
   /** Per-JVM (group dir → read-back schema) cache for the protocol's
     * OWN immutable parquet: data groups and DV sidecars are written
@@ -885,11 +849,12 @@ object VersionedTable {
     * to a pre-rename version naturally shows the old names). Returns
     * None when no version exists yet. */
   def read(spark: SparkSession, path: String,
-      asOfVersion: Option[Long] = None): Option[DataFrame] = {
-    val live = liveGroups(spark, path, asOfVersion)
-    readGroups(spark, path, live,
-      schemaStateAt(spark, path, asOfVersion))
-  }
+      asOfVersion: Option[Long] = None): Option[DataFrame] =
+    readSnapshot(spark, path, snapshot(spark, path, asOfVersion))
+
+  private def readSnapshot(spark: SparkSession, path: String,
+      s: Snapshot): Option[DataFrame] =
+    readGroups(spark, path, s.groups, s.schema)
 
   /** Relation-integrated read (round-15): expose the snapshot as a
     * STANDARD parquet relation over a
@@ -922,9 +887,8 @@ object VersionedTable {
     * [[read]] (the reconciling path). None on an empty table too. */
   def readIndexed(spark: SparkSession, path: String, keyCol: String,
       asOfVersion: Option[Long] = None): Option[DataFrame] = {
-    val live = liveGroups(spark, path, asOfVersion)
+    val Snapshot(_, live, st) = snapshot(spark, path, asOfVersion)
     if (live.isEmpty) return None
-    val st = schemaStateAt(spark, path, asOfVersion)
     val dirs = live.map(g => groupPath(path, g.name))
     // uniform-schema gate in TWO planning reads, not one per group
     // (index_tiers measured the per-group form at ~65 ms/group — a
@@ -991,15 +955,15 @@ object VersionedTable {
     * committed version. */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, allowEvolution: Boolean = false): Long = {
-    // version FIRST, gates second: a schema-carrying commit landing
-    // between the gate evaluation and the publish then moves the head
-    // past `v` and the publish CONFLICTS (caller re-derives, gates
-    // re-run) — gates-first left a window where an old-schema batch
-    // could land cleanly one version after a rename (race-spec pinned)
-    val v = currentVersion(spark, path)
-    requireKnownColumns(spark, path, updates, allowEvolution)
-    requireChecks(spark, path, updates)
-    val merged = read(spark, path, Some(v)) match {
+    // gates, read and publish all use ONE snapshot: a schema-carrying
+    // commit landing after it moves the head past `snap.version` and
+    // the publish CONFLICTS (caller re-derives, gates re-run) — an
+    // old-schema batch can never land cleanly one version after a
+    // rename (race-spec pinned)
+    val snap = snapshot(spark, path)
+    requireKnownColumns(spark, path, snap, updates, allowEvolution)
+    requireChecks(snap, updates)
+    val merged = readSnapshot(spark, path, snap) match {
       case Some(cur) =>
         cur.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
           "left_anti").unionByName(updates, allowMissingColumns = true)
@@ -1007,7 +971,7 @@ object VersionedTable {
     }
     // validate = false: the updates were just gated above, carried
     // rows hold by induction — re-probing would scan the snapshot
-    commit(spark, path, merged, v, replace = true,
+    commitAt(spark, path, snap, merged, replace = true,
       statsCol = Some(keyCol), allowEvolution = allowEvolution,
       validate = false, op = Some("merge"))
   }
@@ -1023,20 +987,20 @@ object VersionedTable {
     * (committedVersion, rewrittenGroupCount). */
   def mergePruned(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, allowEvolution: Boolean = false): (Long, Int) = {
-    // version before gates — the merge() rule
-    val v = currentVersion(spark, path)
-    requireKnownColumns(spark, path, updates, allowEvolution)
-    requireChecks(spark, path, updates)
-    val live = liveGroups(spark, path, Some(v))
+    // one snapshot for gates and rewrite — the merge() rule
+    val snap = snapshot(spark, path)
+    requireKnownColumns(spark, path, snap, updates, allowEvolution)
+    requireChecks(snap, updates)
+    val live = snap.groups
     if (live.isEmpty)
-      return (commit(spark, path, updates, v, replace = true,
+      return (commitAt(spark, path, snap, updates, replace = true,
         statsCol = Some(keyCol), op = Some("merge_pruned")), 0)
     val r = updates.agg(min(col(keyCol).cast("long")),
       max(col(keyCol).cast("long"))).head()
     // all-null update keys match nothing: append the updates as-is
     if (r.isNullAt(0)) {
       val g = stageGroup(spark, path, updates, Some(keyCol))
-      return (commitEntry(spark, path, live :+ g, v, replace = true,
+      return (commitEntry(spark, path, snap, live :+ g, replace = true,
         staged = Seq(g.name), op = Some("merge_pruned")), 0)
     }
     val (uLo, uHi) = (r.getLong(0), r.getLong(1))
@@ -1046,8 +1010,7 @@ object VersionedTable {
         case _ => true // no stats -> conservative rewrite
       }
     }
-    val touchedDf = readGroups(spark, path, touched,
-      schemaStateAt(spark, path, Some(v)))
+    val touchedDf = readGroups(spark, path, touched, snap.schema)
     val rewritten = touchedDf match {
       case Some(t) =>
         // reconciling union: on a mixed-schema table (or a widening
@@ -1059,7 +1022,7 @@ object VersionedTable {
       case None => updates
     }
     val g = stageGroup(spark, path, rewritten, Some(keyCol))
-    (commitEntry(spark, path, carried :+ g, v, replace = true,
+    (commitEntry(spark, path, snap, carried :+ g, replace = true,
       staged = Seq(g.name), op = Some("merge_pruned")), touched.size)
   }
 
@@ -1093,16 +1056,15 @@ object VersionedTable {
   def mergeDv(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, maxDvFraction: Double = 0.3,
       allowEvolution: Boolean = false,
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs,
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
       batchId: Option[Long] = None): (Long, Int, Int) = {
     require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
       s"maxDvFraction must be in [0,1]: $maxDvFraction")
-    // version before gates — the merge() rule
-    val v = currentVersion(spark, path)
-    requireKnownColumns(spark, path, updates, allowEvolution)
-    requireChecks(spark, path, updates)
-    val live = liveGroups(spark, path, Some(v))
+    // one snapshot for gates and rewrite — the merge() rule
+    val snap = snapshot(spark, path)
+    val Snapshot(v, live, st) = snap
+    requireKnownColumns(spark, path, snap, updates, allowEvolution)
+    requireChecks(snap, updates)
     if (live.isEmpty) {
       // dropIfEmpty discipline even on the bootstrap commit: an empty
       // first micro-batch must not found the table on a zero-row group
@@ -1110,12 +1072,11 @@ object VersionedTable {
           stageGroup(spark, path, updates, Some(keyCol))) match {
         case None => return (v, 0, 0)
         case Some(g) =>
-          return (commitEntry(spark, path, Seq(g), v, replace = true,
+          return (commitEntry(spark, path, snap, Seq(g), replace = true,
             staged = Seq(g.name), batchId = batchId,
             arbiterFor = arbiterFor, op = Some("merge_dv")), 0, 0)
       }
     }
-    val st = schemaStateAt(spark, path, Some(v))
     var staged = List.empty[String]
     var masked = 0
     var rewrote = 0
@@ -1225,7 +1186,7 @@ object VersionedTable {
       val gNew = dropIfEmpty(spark, path, gNew0)
       if (gNew.isEmpty) staged = staged.filterNot(_ == gNew0.name)
       if (gNew.isEmpty && masked == 0 && rewrote == 0) return (v, 0, 0)
-      (commitEntry(spark, path, updated ++ gNew.toSeq, v, replace = true,
+      (commitEntry(spark, path, snap, updated ++ gNew.toSeq, replace = true,
         staged = staged, batchId = batchId,
         arbiterFor = arbiterFor, op = Some("merge_dv")), masked, rewrote)
     } catch {
@@ -1236,26 +1197,11 @@ object VersionedTable {
     }
   }
 
-  /** True when any log entry in (from, to] carries schema state — a
-    * rename/drop/CHECK landed in the window. One small-file read per
-    * version; callers probe only after a lost race. */
-  private def schemaEntryBetween(spark: SparkSession, path: String,
-      from: Long, to: Long): Boolean = {
-    val f = fs(spark, logDir(path))
-    (from + 1 to to).exists { v =>
-      readJson(f, new Path(logDir(path), f"v$v%08d.json"))
-        .contains("\"ren\":")
-    }
-  }
-
-  /** The raw log entries in (from, to], oldest first. */
+  /** The log entries in (from, to], oldest first. */
   private def entriesBetween(spark: SparkSession, path: String,
       from: Long, to: Long): Seq[Entry] = {
-    val f = fs(spark, logDir(path))
-    (from + 1 to to).map { v =>
-      val raw = readJson(f, new Path(logDir(path), f"v$v%08d.json"))
-      Entry(v, parseGroups(raw), jsonField(raw, "replace").toBoolean)
-    }
+    val f = fs(spark, path)
+    (from + 1 to to).map(v => readEntry(f, entryPath(path, v)))
   }
 
   /** MERGE (stats-pruned) with OPTIMISTIC REBASE — logical conflict
@@ -1288,12 +1234,17 @@ object VersionedTable {
       updates: DataFrame, keyCol: String,
       maxRebases: Int = 16,
       fromVersion: Option[Long] = None): (Long, Int, Int) = {
-    // version before gates — the merge() rule (an explicit
-    // fromVersion pins the snapshot even earlier, same safety)
-    val v0 = fromVersion.getOrElse(currentVersion(spark, path))
-    requireKnownColumns(spark, path, updates, allowEvolution = false)
-    requireChecks(spark, path, updates)
-    val live = liveGroups(spark, path, Some(v0))
+    // the gates read the head, the merge reads `fromVersion` (default:
+    // the head) — both from one listing; a commit landing after either
+    // goes through the fold-or-conflict check below
+    val log = listLog(spark, path)
+    val head = snapshotOf(spark, path, log, None)
+    val snap0 =
+      if (fromVersion.isEmpty) head
+      else snapshotOf(spark, path, log, fromVersion)
+    requireKnownColumns(spark, path, head, updates, allowEvolution = false)
+    requireChecks(head, updates)
+    val live = snap0.groups
     val r = updates.agg(min(col(keyCol).cast("long")),
       max(col(keyCol).cast("long"))).head()
     // degenerate inputs keep mergePruned's exact semantics; the
@@ -1316,8 +1267,7 @@ object VersionedTable {
     val unbounded = touched.exists(g => g.lo.isEmpty || g.hi.isEmpty)
     val protLo = (uLo +: touched.flatMap(_.lo)).min
     val protHi = (uHi +: touched.flatMap(_.hi)).max
-    val rewritten = readGroups(spark, path, touched,
-        schemaStateAt(spark, path, Some(v0))) match {
+    val rewritten = readGroups(spark, path, touched, snap0.schema) match {
       case Some(t) =>
         t.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
           "left_anti").unionByName(updates, allowMissingColumns = true)
@@ -1325,20 +1275,20 @@ object VersionedTable {
     }
     val g = stageGroup(spark, path, rewritten, Some(keyCol))
     var carried = carried0
-    var expected = v0
+    var base = snap0
     var rebases = 0
     while (true) {
       try {
         // staged = empty: a lost race must NOT clean the group — the
         // fold path re-publishes it (the commitAppendWithRetry rule);
         // real conflicts below delete it explicitly
-        return (commitEntry(spark, path, carried :+ g, expected,
+        return (commitEntry(spark, path, base, carried :+ g,
           replace = true, staged = Seq.empty,
           op = Some("merge_rebase")), touched.size, rebases)
       } catch {
         case e: CommitConflictException =>
-          val now = currentVersion(spark, path)
-          val folded = entriesBetween(spark, path, expected, now)
+          val now = snapshot(spark, path)
+          val folded = entriesBetween(spark, path, base.version, now.version)
             .forall { entry =>
               val foldable = !entry.replace && !unbounded &&
                 entry.groups.forall { ig =>
@@ -1355,7 +1305,7 @@ object VersionedTable {
             fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
             throw e
           }
-          expected = now
+          base = now
       }
     }
     throw new IllegalStateException("unreachable")
@@ -1375,16 +1325,15 @@ object VersionedTable {
       lo: Long, hi: Long,
       asOfVersion: Option[Long] = None): (Option[DataFrame], Int) = {
     require(lo <= hi, s"empty read range [$lo,$hi]")
-    val live = liveGroups(spark, path, asOfVersion)
-    val overlapping = live.filter { g =>
+    val snap = snapshot(spark, path, asOfVersion)
+    val overlapping = snap.groups.filter { g =>
       (g.lo, g.hi) match {
         case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
         case _ => true // no stats -> conservative open
       }
     }
     val k = col(keyCol).cast("long")
-    (readGroups(spark, path, overlapping,
-        schemaStateAt(spark, path, asOfVersion))
+    (readGroups(spark, path, overlapping, snap.schema)
       .map(_.filter(k >= lo && k <= hi)), overlapping.size)
   }
 
@@ -1404,22 +1353,20 @@ object VersionedTable {
   def deleteRange(spark: SparkSession, path: String, keyCol: String,
       lo: Long, hi: Long): (Long, Int) = {
     require(lo <= hi, s"empty delete range [$lo,$hi]")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
-    val (touched, carried) = live.partition { g =>
+    val snap = snapshot(spark, path)
+    val (touched, carried) = snap.groups.partition { g =>
       (g.lo, g.hi) match {
         case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
         case _ => true // no stats -> conservative rewrite
       }
     }
-    if (touched.isEmpty) return (v, 0)
+    if (touched.isEmpty) return (snap.version, 0)
     val k = col(keyCol).cast("long")
-    val remaining = readGroups(spark, path, touched,
-        schemaStateAt(spark, path, Some(v))).get
+    val remaining = readGroups(spark, path, touched, snap.schema).get
       .filter(k.isNull || k < lo || k > hi)
     val g = stageGroup(spark, path, remaining, Some(keyCol))
     val keep = dropIfEmpty(spark, path, g).toSeq
-    (commitEntry(spark, path, carried ++ keep, v, replace = true,
+    (commitEntry(spark, path, snap, carried ++ keep, replace = true,
       staged = keep.map(_.name), op = Some("delete_range")), touched.size)
   }
 
@@ -1444,10 +1391,9 @@ object VersionedTable {
     * When the stats prove no group overlaps, metadata-only no-op. */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String): (Long, Int) = {
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    val Snapshot(v, live, st) = snap
     require(live.nonEmpty, "deleteKeys on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
     val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
       .distinct()
     val r = k.agg(min(col(keyCol).cast("long")),
@@ -1500,7 +1446,7 @@ object VersionedTable {
       }
     }
     if (staged.isEmpty) return (v, 0)
-    (commitEntry(spark, path, updated, v, replace = true,
+    (commitEntry(spark, path, snap, updated, replace = true,
       staged = staged, op = Some("delete_keys")), staged.size)
   }
 
@@ -1527,16 +1473,17 @@ object VersionedTable {
   def changeFeed(spark: SparkSession, path: String, keyCol: String,
       fromVersion: Long, toVersion: Long,
       skipShared: Boolean = true): DataFrame = {
-    val fromG = liveGroups(spark, path, Some(fromVersion))
-    val toG = liveGroups(spark, path, Some(toVersion))
+    // both sides from one listing, each read under ITS OWN column
+    // mapping (the same rule as time travel); a rename between the
+    // versions surfaces as the logical columns differing and the
+    // existing key/type requires fire — the reader's problem, as with
+    // s16/s17 evolution
+    val log = listLog(spark, path)
+    val Snapshot(_, fromG, fromSt) =
+      snapshotOf(spark, path, log, Some(fromVersion))
+    val Snapshot(_, toG, toSt) = snapshotOf(spark, path, log, Some(toVersion))
     require(fromG.nonEmpty || toG.nonEmpty,
       s"changeFeed: no live data at either version ($fromVersion, $toVersion)")
-    // each side reads under ITS OWN column mapping (the same rule as
-    // time travel); a rename between the versions surfaces as the
-    // logical columns differing and the existing key/type requires
-    // fire — the reader's problem, as with s16/s17 evolution
-    val fromSt = schemaStateAt(spark, path, Some(fromVersion))
-    val toSt = schemaStateAt(spark, path, Some(toVersion))
     // a group is "shared" only when BOTH its data files AND its
     // deletion vector are identical across the versions — a new DV on
     // an unchanged group changes its visible rows, so it must be read
@@ -1629,7 +1576,7 @@ object VersionedTable {
     val f = fs(spark, path)
     val dataDir = new Path(s"$path/data")
     if (!f.exists(dataDir)) return Seq.empty
-    val d = new Path(logDir(path))
+    val log = listLog(spark, path)
     // entries AND checkpoints both pin groups: after expireVersions
     // the horizon checkpoint is the ONLY reference to the live set it
     // consolidated — vacuuming on entries alone would delete live data
@@ -1638,12 +1585,8 @@ object VersionedTable {
     // optimizeZOrder layout): vacuum operates on first-level dirs, so
     // the first path segment is what pins them
     val referenced: Set[String] =
-      if (!f.exists(d)) Set.empty
-      else f.listStatus(d).map(_.getPath).toSeq
-        .filter(p => p.getName.endsWith(".json") &&
-          (p.getName.startsWith("v") || p.getName.startsWith("chk-v")))
-        .flatMap(p => parseGroups(readJson(f, p))
-          .flatMap(g => g.name +: g.dv.toSeq))
+      (log.entries.map(_._2.getPath) ++ log.checkpoints.map(chkPath(path, _)))
+        .flatMap(p => readEntry(f, p).groups.flatMap(g => g.name +: g.dv.toSeq))
         .map(_.split('/').head)
         .toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
@@ -1672,35 +1615,19 @@ object VersionedTable {
   def expireVersions(spark: SparkSession, path: String,
       keepLast: Int): Long = {
     require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
-    val current = currentVersion(spark, path)
-    val horizon = current - keepLast
-    if (horizon <= 0) return 0L
+    val log = listLog(spark, path)
+    val horizon = log.head - keepLast
+    val expired = log.entries.filter(_._1 <= horizon)
+    if (expired.isEmpty) return 0L
     val f = fs(spark, path)
-    val d = new Path(logDir(path))
     // consolidate BEFORE dropping: the checkpoint must land first so
-    // a reader never sees the tail without its base
-    val live = liveGroups(spark, path, Some(horizon))
-    val chk = new Path(d, f"chk-v$horizon%08d.json")
-    // the horizon checkpoint may become the ONLY record of a
-    // rename/drop whose entry is about to be dropped
-    val st = schemaStateAt(spark, path, Some(horizon))
-    val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
-    val body = s"""{"version":$horizon,$stJs${groupsJson(live)}}"""
-    val out = f.create(chk, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    var dropped = 0L
-    f.listStatus(d).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("chk-v") && n.endsWith(".json")) {
-        if (n.stripPrefix("chk-v").stripSuffix(".json").toLong < horizon)
-          f.delete(st.getPath, false)
-      } else if (n.startsWith("v") && n.endsWith(".json")) {
-        if (n.stripPrefix("v").stripSuffix(".json").toLong <= horizon) {
-          f.delete(st.getPath, false); dropped += 1
-        }
-      }
-    }
-    dropped
+    // a reader never sees the tail without its base (it may become the
+    // ONLY record of a rename/drop whose entry is about to be dropped)
+    writeCheckpoint(f, path, snapshotOf(spark, path, log, Some(horizon)))
+    log.checkpoints.filter(_ < horizon)
+      .foreach(v => f.delete(chkPath(path, v), false))
+    expired.foreach { case (_, st) => f.delete(st.getPath, false) }
+    expired.size.toLong
   }
 
   /** OPTIMIZE: rewrite the current snapshot into files sized near
@@ -1717,8 +1644,8 @@ object VersionedTable {
       targetBytes: Long = 128L << 20,
       statsCol: Option[String] = None): (Long, Long) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    val live = snap.groups
     if (live.isEmpty) return (0L, 0L)
     val f = fs(spark, path)
     val bytes = live.map { g =>
@@ -1728,9 +1655,8 @@ object VersionedTable {
     // the compacted group is written under LOGICAL names, so the
     // mapping becomes vacuous for it (rename/drop history stays in
     // the log for time travel)
-    val snapshot = readGroups(spark, path, live,
-      schemaStateAt(spark, path, Some(v))).get
-    val committed = commit(spark, path, snapshot.repartition(nFiles), v,
+    val rows = readSnapshot(spark, path, snap).get
+    val committed = commitAt(spark, path, snap, rows.repartition(nFiles),
       replace = true, statsCol = statsCol, validate = false,
       op = Some("optimize"))
     (committed, nFiles.toLong)
@@ -1758,11 +1684,9 @@ object VersionedTable {
     require(boundaries == boundaries.sorted &&
       boundaries.distinct.size == boundaries.size,
       s"boundaries must be strictly ascending: $boundaries")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
-    require(live.nonEmpty, "optimizeClustered on an empty table")
-    val snap = readGroups(spark, path, live,
-        schemaStateAt(spark, path, Some(v))).get
+    val base = snapshot(spark, path)
+    require(base.groups.nonEmpty, "optimizeClustered on an empty table")
+    val snap = readSnapshot(spark, path, base).get
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val k = col(keyCol).cast("long")
@@ -1779,7 +1703,7 @@ object VersionedTable {
         }.otherwise(boundaries.size)
       val (name, groups) = stageSpans(spark, path,
         snap.withColumn("__graft_span", spanId), keyCol)
-      (commitEntry(spark, path, groups, v, replace = true,
+      (commitEntry(spark, path, base, groups, replace = true,
         staged = Seq(name),
         op = Some("optimize_clustered")), groups.size)
     } finally snap.unpersist()
@@ -1865,11 +1789,9 @@ object VersionedTable {
       colA: String, colB: String, targetGroups: Int,
       statsCol: String): (Long, Int) = {
     require(targetGroups >= 2, s"need >= 2 groups: $targetGroups")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
-    require(live.nonEmpty, "optimizeZOrder on an empty table")
-    val snap0 = readGroups(spark, path, live,
-      schemaStateAt(spark, path, Some(v))).get
+    val base = snapshot(spark, path)
+    require(base.groups.nonEmpty, "optimizeZOrder on an empty table")
+    val snap0 = readSnapshot(spark, path, base).get
     Seq(colA, colB).foreach(c => require(
       snap0.columns.contains(c), s"no such column: $c"))
     val r = snap0.agg(
@@ -1911,7 +1833,7 @@ object VersionedTable {
         statsCol)
       require(groups.nonEmpty, "z-order write produced no spans")
       // staged = the whole uuid dir: a lost race cleans every span
-      (commitEntry(spark, path, groups, v, replace = true,
+      (commitEntry(spark, path, base, groups, replace = true,
         staged = Seq(name),
         op = Some("optimize_zorder")), groups.size)
     } finally snap.unpersist()
@@ -1933,23 +1855,22 @@ object VersionedTable {
     * data to clean; just re-read and retry). Returns the committed
     * version. */
   def restore(spark: SparkSession, path: String, toVersion: Long,
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs): Long = {
-    val v = currentVersion(spark, path)
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs): Long = {
+    val log = listLog(spark, path)
+    val v = log.head
     require(toVersion >= 1 && toVersion <= v,
       s"restore target v$toVersion outside committed range [1, $v]")
-    val f = fs(spark, path)
-    val entry = new Path(logDir(path), f"v$toVersion%08d.json")
-    val chk = new Path(logDir(path), f"chk-v$toVersion%08d.json")
-    require(f.exists(entry) || f.exists(chk),
+    require(log.entries.exists(_._1 == toVersion) ||
+        log.checkpoints.contains(toVersion),
       s"restore target v$toVersion is behind the retention horizon " +
         "(expireVersions dropped its log entry) — its live set can " +
         "no longer be resolved")
-    val target = liveGroups(spark, path, Some(toVersion))
+    val f = fs(spark, path)
+    val target = snapshotOf(spark, path, log, Some(toVersion))
     // belt-and-braces: vacuum never reclaims referenced groups, so a
     // missing directory means external tampering — refuse loudly
     // rather than commit a snapshot that cannot be read
-    target.foreach { g =>
+    target.groups.foreach { g =>
       (g.name +: g.dv.toSeq).foreach { n =>
         require(f.exists(new Path(groupPath(path, n))),
           s"file $n referenced by v$toVersion is missing on disk — " +
@@ -1959,9 +1880,10 @@ object VersionedTable {
     // restore the schema state of the target era too (Delta RESTORE
     // semantics): published even when empty — an empty state must
     // still OVERRIDE later renames/drops in the latest-wins walk
-    commitEntry(spark, path, target, v, replace = true,
-      staged = Seq.empty, arbiterFor = arbiterFor, op = Some("restore"),
-      schema = Some(schemaStateAt(spark, path, Some(toVersion))))
+    commitEntry(spark, path, snapshotOf(spark, path, log, None),
+      target.groups, replace = true, staged = Seq.empty,
+      arbiterFor = arbiterFor, op = Some("restore"),
+      schema = Some(target.schema))
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` verb):
@@ -1984,17 +1906,16 @@ object VersionedTable {
       asOfVersion: Option[Long] = None): Long = {
     require(src.startsWith("/") || src.contains("://"),
       s"clone source must be an absolute path: $src")
-    require(currentVersion(spark, dst) == 0,
-      s"clone target $dst already has commits")
-    val live = liveGroups(spark, src, asOfVersion)
+    val base = snapshot(spark, dst)
+    require(base.version == 0, s"clone target $dst already has commits")
+    val Snapshot(_, live, st) = snapshot(spark, src, asOfVersion)
     require(live.nonEmpty,
       s"clone source $src has no live data" +
         asOfVersion.fold("")(v => s" at v$v"))
     val refs = live.map(g => g.copy(name = groupPath(src, g.name),
       dv = g.dv.map(groupPath(src, _))))
-    commitEntry(spark, dst, refs, 0L, replace = true, staged = Seq.empty,
-      op = Some("clone"),
-      schema = Some(schemaStateAt(spark, src, asOfVersion)))
+    commitEntry(spark, dst, base, refs, replace = true, staged = Seq.empty,
+      op = Some("clone"), schema = Some(st))
   }
 
   /** RENAME COLUMN, metadata-only (the Delta columnMapping idea,
@@ -2012,24 +1933,17 @@ object VersionedTable {
   def renameColumn(spark: SparkSession, path: String,
       oldName: String, newName: String): Long = {
     require(oldName != newName, "rename to the same name is a no-op")
-    // both ends serialize into the "phys>logical" log array, so both
-    // inherit the full reserved set (a ',' or '"' or ']' would corrupt
-    // arrayBody parsing of EVERY later entry, same rule as addCheck)
-    Seq(oldName, newName).foreach { n =>
-      require(n.nonEmpty && !n.exists(c => ">,\"]".contains(c)),
-        s"column name must be free of > , \" ] (log-format limit): $n")
-    }
-    val v = currentVersion(spark, path)
-    require(v >= 1, "rename on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
-    val cols = read(spark, path, Some(v)).get.schema.fieldNames.toSet
+    val snap = snapshot(spark, path)
+    require(snap.version >= 1, "rename on an empty table")
+    val st = snap.schema
+    val cols = readSnapshot(spark, path, snap).get.schema.fieldNames.toSet
     require(cols(oldName), s"column $oldName does not exist (have: " +
       cols.mkString(", ") + ")")
     require(!cols(newName), s"column $newName already exists")
     val ren = (st.renames.map { case (p, l) =>
       if (l == oldName) (p, newName) else (p, l)
     } :+ (oldName -> newName)).filter(pl => pl._1 != pl._2).distinct
-    commitEntry(spark, path, liveGroups(spark, path, Some(v)), v,
+    commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("rename_column"),
       schema = Some(SchemaState(ren, st.drops)))
   }
@@ -2045,13 +1959,10 @@ object VersionedTable {
     * MERGE drops the vector), then drop the column. */
   def dropColumn(spark: SparkSession, path: String,
       colName: String): Long = {
-    require(colName.nonEmpty && !colName.exists(c => ">,\"]".contains(c)),
-      s"column name must be free of > , \" ] (log-format limit): $colName")
-    val v = currentVersion(spark, path)
+    val snap = snapshot(spark, path)
+    val Snapshot(v, live, st) = snap
     require(v >= 1, "drop on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
-    val live = liveGroups(spark, path, Some(v))
-    val cols = read(spark, path, Some(v)).get.schema.fieldNames.toSet
+    val cols = readSnapshot(spark, path, snap).get.schema.fieldNames.toSet
     require(cols(colName), s"column $colName does not exist")
     require(cols.size > 1, "cannot drop the table's last column")
     live.foreach { g =>
@@ -2067,7 +1978,7 @@ object VersionedTable {
             "before dropping it")
       }
     }
-    commitEntry(spark, path, live, v,
+    commitEntry(spark, path, snap, live,
       replace = true, staged = Seq.empty, op = Some("drop_column"),
       schema = Some(SchemaState(st.renames, st.drops :+ colName)))
   }
@@ -2090,8 +2001,8 @@ object VersionedTable {
       statsCol: Option[String] = None): Long = {
     require(srcDir.startsWith("/") || srcDir.contains("://"),
       s"convert source must be an absolute path: $srcDir")
-    require(currentVersion(spark, path) == 0,
-      s"convert target $path already has commits")
+    val base = snapshot(spark, path)
+    require(base.version == 0, s"convert target $path already has commits")
     require(!scala.util.Try(spark.read.parquet(srcDir).schema)
         .toOption.forall(_.isEmpty),
       s"convert source $srcDir is not readable parquet")
@@ -2099,9 +2010,9 @@ object VersionedTable {
       case Some(c) => groupStats(spark, srcDir, c)
       case None => (None, Seq.empty[(String, Long, Long)])
     }
-    commitEntry(spark, path, Seq(Group(srcDir,
+    commitEntry(spark, path, base, Seq(Group(srcDir,
         key.map(_._1), key.map(_._2), xs = xs)),
-      0L, replace = true, staged = Seq.empty, op = Some("convert"))
+      replace = true, staged = Seq.empty, op = Some("convert"))
   }
 
   /** The newest version whose log entry was published at or before
@@ -2113,20 +2024,10 @@ object VersionedTable {
     * table has no version that old or the history was expired past
     * it. */
   def versionAtTime(spark: SparkSession, path: String,
-      tsMs: Long): Option[Long] = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return None
-    f.listStatus(d).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("v") && n.endsWith(".json") &&
-          st.getModificationTime <= tsMs
-      }
-      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".json")
-        .toLong)
-      .sorted.lastOption
-  }
+      tsMs: Long): Option[Long] =
+    listLog(spark, path).entries
+      .collect { case (v, st) if st.getModificationTime <= tsMs => v }
+      .lastOption
 
   /** Timestamp-based time travel: [[read]] at
     * [[versionAtTime]](tsMs). None when no version existed then. */
@@ -2146,30 +2047,12 @@ object VersionedTable {
     * after logRetention. Metadata-only: cost is one small-file read
     * per surviving entry, independent of table size. */
   def history(spark: SparkSession, path: String): DataFrame = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    val rows: Seq[(Long, Option[String], Option[Long], Int, Boolean,
-        Long)] =
-      if (!f.exists(d)) Seq.empty
-      else f.listStatus(d).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith("v") && n.endsWith(".json")
-        }
-        .sortBy(-_.getPath.getName.stripPrefix("v")
-          .stripSuffix(".json").toLong)
-        .map { st =>
-          val raw = readJson(f, st.getPath)
-          val v = jsonField(raw, "version").toLong
-          val op = if (!raw.contains("\"op\":")) None
-            else Some(jsonField(raw, "op")
-              .stripPrefix("\"").stripSuffix("\""))
-          val batch = if (!raw.contains("\"batch\":")) None
-            else Some(jsonField(raw, "batch").toLong)
-          (v, op, batch, parseGroups(raw).size,
-            jsonField(raw, "replace").toBoolean,
-            st.getModificationTime)
-        }
+    val f = fs(spark, path)
+    val rows = listLog(spark, path).entries.reverse.map { case (_, st) =>
+      val e = readEntry(f, st.getPath)
+      (e.version, e.op, e.batch, e.groups.size, e.replace,
+        st.getModificationTime)
+    }
     import spark.implicits._
     rows.toDF("version", "op", "batch", "n_groups", "replace", "ts_ms")
   }

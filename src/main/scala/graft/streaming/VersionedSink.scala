@@ -42,9 +42,8 @@ object VersionedSink {
     * (the unchanged head for empty/retried ones). */
   def appendBatch(spark: SparkSession, path: String, df: DataFrame,
       batchId: Long, statsCol: Option[String] = None): Long = {
-    val head = VersionedTable.currentVersion(spark, path)
-    if (VersionedTable.headBatchId(spark, path).contains(batchId)) head
-    else if (df.isEmpty) head
+    val (head, headBatch) = VersionedTable.headBatch(spark, path)
+    if (headBatch.contains(batchId) || df.isEmpty) head
     else VersionedTable.commit(spark, path, df, head,
       statsCol = statsCol, batchId = Some(batchId))
   }
@@ -74,9 +73,8 @@ object VersionedSink {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
     var attempts = 0
     while (true) {
-      val head = VersionedTable.currentVersion(spark, path)
-      if (VersionedTable.headBatchId(spark, path).contains(batchId))
-        return head
+      val (head, headBatch) = VersionedTable.headBatch(spark, path)
+      if (headBatch.contains(batchId)) return head
       try {
         return VersionedTable.mergeDv(spark, path, df, keyCol,
           maxDvFraction = maxDvFraction, batchId = Some(batchId))._1

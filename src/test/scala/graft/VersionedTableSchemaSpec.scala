@@ -224,18 +224,71 @@ class VersionedTableSchemaSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, p).get.columns.toSeq == Seq("k"))
   }
 
-  test("rename/drop column names inherit addCheck's reserved-char " +
-      "guard: a ',' '\"' ']' would corrupt the log arrays") {
+  test("the log round-trips any CHECK expression and column name: an " +
+      "IN-list check, and names holding , \" ] > : | through rename, " +
+      "drop, stats pruning, a checkpoint boundary and time travel") {
     val p = tmp()
-    VersionedTable.commit(spark, p, df(1L -> "a"), 0L)
-    Seq("a,b", "a\"b", "a]b", "a>b").foreach { bad =>
-      intercept[IllegalArgumentException] {
-        VersionedTable.renameColumn(spark, p, "v", bad)
-      }
-      intercept[IllegalArgumentException] {
-        VersionedTable.dropColumn(spark, p, bad)
-      }
+    import spark.implicits._
+    val odd = "w,\"]>:|x"
+    val renamed = "r,\"]>:|y"
+    val gone = "d,\"]>:|z"
+    def batch(ks: Seq[Long], pay: Long) =
+      ks.map(k => (k, pay, k * 10, "g")).toDF("k", "pay", odd, gone)
+    def head() = VersionedTable.currentVersion(spark, p)
+    val v1 = VersionedTable.commit(spark, p, batch(1L to 4L, 1L), 0L,
+      statsCol = Some("k"))
+    Seq(10L, 20L, 30L).foreach { lo =>
+      VersionedTable.commit(spark, p, batch(lo + 1 to lo + 4, 2L), head(),
+        statsCol = Some("k"))
     }
+    val v4 = head()
+    assert(VersionedTable.snapshot(spark, p).groups.forall(
+      _.xs.exists(_._1 == odd)), "odd-named column must carry stats")
+    val v5 = VersionedTable.renameColumn(spark, p, odd, renamed)
+    val v6 = VersionedTable.dropColumn(spark, p, gone)
+    VersionedTable.addCheck(spark, p, "pay_in", "pay IN (1, 2)")
+    val err = intercept[IllegalArgumentException] {
+      VersionedTable.commit(spark, p,
+        Seq((41L, 3L, 410L)).toDF("k", "pay", renamed), head(),
+        statsCol = Some("k"))
+    }
+    assert(err.getMessage.contains("pay_in"), err.getMessage)
+    VersionedTable.commit(spark, p,
+      Seq((41L, 2L, 410L)).toDF("k", "pay", renamed), head(),
+      statsCol = Some("k"))
+    VersionedTable.optimizeClustered(spark, p, "k", Seq(10L, 20L, 30L, 40L))
+    val v10 = VersionedTable.commit(spark, p,
+      Seq((51L, 1L, 510L)).toDF("k", "pay", renamed), head(),
+      statsCol = Some("k"))
+    assert(v10 == 10L)
+    assert(new java.io.File(p, "_log/chk-v00000010.json").exists,
+      "v10 must write the boundary checkpoint")
+    // the head snapshot IS the checkpoint: its schema state decodes back
+    assert(VersionedTable.snapshot(spark, p).schema ==
+      VersionedTable.SchemaState(Seq(odd -> renamed), Seq(gone),
+        Seq("pay_in" -> "pay IN (1, 2)")))
+    val now = VersionedTable.read(spark, p).get
+    assert(now.columns.toSeq == Seq("k", "pay", renamed))
+    assert(now.collect().map(r => r.getLong(0) -> r.getLong(2)).toSet ==
+      ((1L to 4L) ++ (11L to 14L) ++ (21L to 24L) ++ (31L to 34L) ++
+        Seq(41L, 51L)).map(k => k -> k * 10).toSet)
+    // stats on the renamed column prune the indexed read
+    def scanned(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      org.apache.spark.sql.graft.Bridge.scannedFiles(df)
+    }
+    val indexed = VersionedTable.readIndexed(spark, p, "k").get
+    val byOdd = indexed.filter(col(renamed) >= 210L && col(renamed) <= 240L)
+    assert(scanned(byOdd) < scanned(indexed), "odd-named stats did not prune")
+    assert(byOdd.collect().map(_.getLong(0)).toSet == (21L to 24L).toSet)
+    // time travel keeps each era's names
+    assert(VersionedTable.read(spark, p, Some(v1)).get.columns.toSeq ==
+      Seq("k", "pay", odd, gone))
+    assert(VersionedTable.read(spark, p, Some(v4)).get.count() == 16)
+    assert(VersionedTable.read(spark, p, Some(v5)).get.columns.toSeq ==
+      Seq("k", "pay", renamed, gone))
+    assert(VersionedTable.read(spark, p, Some(v6)).get.columns.toSeq ==
+      Seq("k", "pay", renamed))
   }
 
   test("commitAppendWithRetry re-validates the CHECK gate after a " +
