@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.bench.Timing
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -9,38 +14,46 @@ import org.apache.spark.sql.SparkSession
   * sink (all columns materialize — `count` would let Catalyst prune
   * projections away); one untimed warmup query first so JVM/codegen
   * startup doesn't land on the first measured query.
+  *
+  * Knobs: SPARK_GRAFT_ONLY (comma-separated query names) and
+  * SPARK_GRAFT_RUNS (passes per query, default 2) — e.g.
+  * `SPARK_GRAFT_ONLY=x1_history SPARK_GRAFT_RUNS=3` re-times one query
+  * in isolation. BENCH_DETAIL.json carries, per query, the min
+  * (`queries`), every pass (`passes`), and the Spark jobs each pass
+  * started (`jobs`).
   */
 object Bench {
+  /** Local property tagging each pass's jobs (inherited by the
+    * broadcast/subquery threads a query spawns). */
+  private val PassKey = "graft.bench.pass"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // bench what a deployed session runs: the graft extensions
-      // (TopKPerKey strategy + rewrite rule, native SQL functions)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // bench what a deployed session runs: the factory session, graft
+    // extensions (TopKPerKey strategy + rewrite rules, SQL functions) on
+    val spark = GraftSession.local(cpus, "graft-bench")
+    val sc = spark.sparkContext
+    val queries = SparkEntry.queries
+
+    val jobsPerPass = new ConcurrentHashMap[String, AtomicInteger]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(PassKey)))
+          .foreach(t => jobsPerPass.computeIfAbsent(t, _ => new AtomicInteger())
+            .incrementAndGet())
+    })
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def runOnce(name: String, tag: String): Double = {
+      sc.setLocalProperty(PassKey, tag)
+      try Timing.secs(Timing.noop(queries(name)(spark, sfDir)))._2
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           errors(name) = String.valueOf(e).take(300)
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
+          -1.0
+      } finally sc.setLocalProperty(PassKey, null)
     }
     // min-of-N passes per query (default 2). This host injects ROAMING
     // load bursts that inflate whichever query is running 5-40x and
@@ -49,46 +62,53 @@ object Bench {
     // one of them. On a quiet host pass 2 == pass 1 within noise, so
     // the reported numbers stay honest — BASELINE.md's table is
     // regenerated under the same min-of-N methodology.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    def run(name: String): Double = {
-      val times = (1 to passes).map(_ => runOnce(name))
-      if (times.exists(_ < 0)) return -1.0
+    val nPasses = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
+    /** Every pass of `name`, pass i tagged `tag#i`; a failed pass
+      * reads -1. */
+    def run(name: String, tag: String): Seq[Double] = {
+      val times = (1 to nPasses).map(i => runOnce(name, s"$tag#$i"))
       // adjudicate disagreement in-run (round-12 verdict item 6): when
       // the two passes differ >=2x and the best is >=1 s, a burst
       // plausibly polluted BOTH (they hit back-to-back, bursts last
       // seconds) — take one more pass so the artifact ships the
       // settled number instead of a phantom regression the judge has
       // to re-run by hand (x6_moments r11, common_neighbors r12).
-      val extra =
-        if (passes > 1 && times.min >= 1.0 && times.max >= 2 * times.min) {
-          val t = runOnce(name)
-          if (t < 0) return -1.0
-          Seq(t)
-        } else Seq.empty
-      (times ++ extra).min
+      if (nPasses > 1 && times.min >= 1.0 && times.max >= 2 * times.min)
+        // (times.min >= 1.0 also means no pass failed)
+        times :+ runOnce(name, s"$tag#${nPasses + 1}")
+      else times
     }
+    def best(passes: Seq[Double]): Double =
+      if (passes.exists(_ < 0)) -1.0 else passes.min
 
     // warmup: JVM + codegen + parquet footer caches
-    run("q1_agg")
+    run("q1_agg", "warmup")
 
     // optional comma-separated filter for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // SPARK_GRAFT_STREAM_LAST=1 moves the transformWithState batch
-    // queries to the end of the run — diagnostic for whether their
-    // state-store setup (provider init, maintenance pool) inflates the
-    // queries that happen to sort after them (round-8 verdict task 3).
-    val streamLast = sys.env.get("SPARK_GRAFT_STREAM_LAST").contains("1")
-    val sorted = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val names =
-      if (streamLast) {
-        val (st, rest) = sorted.partition(_.contains("_stream_"))
-        rest ++ st
-      } else sorted
-    val results = names.map(n => n -> run(n))
+    val names = queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    val passes = names.map(n => n -> run(n, n))
+    val results = passes.map { case (n, ts) => n -> best(ts) }
+
+    // drain the listener bus: the marker job's start is delivered after
+    // every job start posted before it
+    sc.setLocalProperty(PassKey, "drain")
+    sc.parallelize(Seq(1), 1).count()
+    sc.setLocalProperty(PassKey, null)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!jobsPerPass.containsKey("drain") && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    val jobs = passes.map { case (n, ts) =>
+      n -> ts.indices.map(i =>
+        Option(jobsPerPass.get(s"$n#${i + 1}")).fold(0)(_.get))
+    }
+
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    def seqJson[A](rs: Seq[(String, Seq[A])], f: A => String): String =
+      rs.map { case (k, vs) => "\"" + k + "\":" + vs.map(f).mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // Full per-query detail goes to stderr (and a local file for
     // BASELINE.md refreshes); stdout gets ONE compact line. The driver
@@ -108,7 +128,8 @@ object Bench {
       def jstr(s: String): String = json.writeValueAsString(s)
       val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
         .mkString("{", ",", "}")
-      try w.println(s"""{"total":${fmt(total)},"n_failed":${errors.size},"errors":$errJson,"queries":${toJson(results)},"sf":"$sfDir"}""")
+      try w.println(s"""{"total":${fmt(total)},"n_failed":${errors.size},"errors":$errJson,"queries":${toJson(results)},""" +
+        s""""passes":${seqJson(passes, fmt)},"jobs":${seqJson[Int](jobs, _.toString)},"sf":"$sfDir"}""")
       finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_DETAIL.json not written: $e")

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
+
+import graft.bench.Timing
 
 /** Measured bucketed-layout demo (SURVEY.md §4 / VERDICT r5 item 8):
   * the same fact-fact join run (a) off plain parquet — both sides
@@ -18,21 +20,9 @@ import org.apache.spark.sql.functions._
 object BucketBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_bucketbench_wh")
-      .config("spark.ui.enabled", "false")
-      // model both-sides-big: no broadcast escape hatch
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val buckets = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(buckets, "graft-bucketbench")
 
-    val buckets = cpus.toInt
     sources.Sinks.writeBucketed(
       Tables.lineitem(spark, sfDir), "bb_lineitem", "l_orderkey", buckets)
     sources.Sinks.writeBucketed(
@@ -49,23 +39,22 @@ object BucketBench {
       "- Exchange \\(".r
         .findAllIn(df.queryExecution.explainString(FormattedMode)).size
     }
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
 
     val plain = () => joinAgg(Tables.lineitem(spark, sfDir),
       Tables.orders(spark, sfDir))
     val bucketed = () => joinAgg(spark.table("bb_lineitem"),
       spark.table("bb_orders"))
 
-    val shPlain = shuffles(plain())
-    val shBucketed = shuffles(bucketed())
-    // warm both paths once (above), then time 3 runs each
-    def med(f: () => DataFrame): Double = {
-      val ts = (1 to 3).map(_ => time(f().count())).sorted; ts(1)
+    // model both-sides-big: no broadcast escape hatch
+    val (shPlain, shBucketed, tPlain, tBucketed) = Timing.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val shPlain = shuffles(plain())
+      val shBucketed = shuffles(bucketed())
+      // warm both paths once (above), then time 3 runs each
+      def med(f: () => DataFrame): Double =
+        (1 to 3).map(_ => Timing.secs(f().count())._2).sorted.apply(1)
+      (shPlain, shBucketed, med(plain), med(bucketed))
     }
-    val tPlain = med(plain)
-    val tBucketed = med(bucketed)
     println(s"""{"plain_sec":$tPlain,"bucketed_sec":$tBucketed,""" +
       s""""plain_shuffles":$shPlain,"bucketed_shuffles":$shBucketed,""" +
       s""""buckets":$buckets,"sf_dir":"$sfDir"}""")

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.bench.Timing.{best, noop, rmrf, secs, withConf}
+
 /** 10× scale-up experiment: replicate sf0.1 into an sf1-equivalent
   * (consistent key offsets so every join key keeps referential
   * integrity; dimension tables nation/region stay single — exactly
@@ -268,16 +270,10 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the deployed session: graft extensions on, so tier rows time
+    // the planner users run
+    val spark = GraftSession.local(cpus, "graft-scalebench")
 
     // three tiers, identical 32-file layout: 1x, 10x, 100x sf0.1
     val tiers = Seq(1 -> "target/sf01rw", 10 -> "target/sf1",
@@ -287,23 +283,17 @@ object ScaleBench {
         replicate(spark, src, dir, copies = c)
     }
 
-    def time(name: String, d: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val queries = SparkEntry.queries
+    def run(name: String, d: String): Unit = noop(queries(name)(spark, d))
     // warmup (codegen/JIT) untimed at the small scale
-    time("q1_agg", src)
+    run("q1_agg", src)
 
-    // min of 2 runs per point damps JIT/GC noise
-    def best(name: String, d: String): Double =
-      math.min(time(name, d), time(name, d))
-    // optional comma-separated filter for local iteration
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
+    // optional comma-separated row filter for local iteration (the
+    // same SPARK_GRAFT_ONLY Bench reads)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // optional planted-block filter: SPARK_GRAFT_SCALE_BLOCKS=
     // knn_graph,kcore_arms runs just those blocks (and, unless
-    // SPARK_GRAFT_SCALE_ONLY is also set, skips the Subset rows)
+    // SPARK_GRAFT_ONLY is also set, skips the Subset rows)
     val blocks =
       sys.env.get("SPARK_GRAFT_SCALE_BLOCKS").map(_.split(",").toSet)
     def blockOn(name: String): Boolean =
@@ -312,10 +302,9 @@ object ScaleBench {
       if (blocks.nonEmpty && only.isEmpty) Seq.empty[String]
       else Subset.filter(n => only.forall(_.contains(n)))
     val rows = rowNames.map { name =>
-      val t1 = best(name, tiers(0)._2)
-      val t10 = best(name, tiers(1)._2)
-      val t100 = if (SkipAt100(name)) -1.0 else best(name, tiers(2)._2)
-      (name, t1, t10, t100)
+      // min of 2 runs per point damps JIT/GC noise
+      def at(tier: Int): Double = best(2)(run(name, tiers(tier)._2))._2
+      (name, at(0), at(1), if (SkipAt100(name)) -1.0 else at(2))
     }
     val json = rows.map { case (n, t1, t10, t100) =>
       val r = if (t100 > 0) f"${t100 / t10}%.2f" else "null"
@@ -324,7 +313,7 @@ object ScaleBench {
     }.mkString("{", ",", "}")
     System.err.println(s"[scalebench] $json")
     // the planted-fixture experiments below are skipped under the
-    // SPARK_GRAFT_SCALE_ONLY iteration filter (unless requested via
+    // SPARK_GRAFT_ONLY iteration filter (unless requested via
     // SPARK_GRAFT_SCALE_BLOCKS)
     if (only.isEmpty || blocks.nonEmpty) {
       // CC round-count shape on a planted deep chain (diameter 127):
@@ -335,14 +324,11 @@ object ScaleBench {
       if (blockOn("cc_chain")) locally {
         import spark.implicits._
         val chain = (1L until 128L).map(i => (i, i + 1)).toDF("s", "t")
-        def timed[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-        }
-        val ((mlN, mlRounds), mlSec) = timed {
+        val ((mlN, mlRounds), mlSec) = secs {
           val (df, r) = ops.Connect.minLabelRounds(chain, "s", "t", maxIter = 200)
           (df.filter(col("comp") === 1L).count(), r)
         }
-        val ((lsN, lsRounds), lsSec) = timed {
+        val ((lsN, lsRounds), lsSec) = secs {
           val (df, r) = ops.Connect.largeStarRounds(chain, "s", "t")
           (df.filter(col("comp") === 1L).count(), r)
         }
@@ -364,25 +350,14 @@ object ScaleBench {
       // (single pass — at 10x it is already the quadratic lesson);
       // ANN runs 1x/10x/100x min-of-2.
       if (blockOn("knn_graph")) locally {
-        def knnExact(dir: String): Double = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries("x3_knn_graph")(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def knnAnn(dir: String, nLists: Int): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime()
-            val emb = Tables.embeddings(spark, dir)
-            val cents = ops.Similarity.kmeansCentroids(emb, k = nLists,
-              iters = 3)
-            ops.Similarity.ivfKnnGraph(emb, k = 3, nLists = nLists,
-                nProbe = 6, centroids = Some(cents))
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
+        def knnExact(dir: String): Double = secs(run("x3_knn_graph", dir))._2
+        def knnAnn(dir: String, nLists: Int): Double = best(2) {
+          val emb = Tables.embeddings(spark, dir)
+          val cents = ops.Similarity.kmeansCentroids(emb, k = nLists,
+            iters = 3)
+          noop(ops.Similarity.ivfKnnGraph(emb, k = 3, nLists = nLists,
+            nProbe = 6, centroids = Some(cents)))
+        }._2
         val ex1 = knnExact("target/sf01rw")
         val ex10 = knnExact("target/sf1")
         // the quadratic only BITES at the 100x tier: at 10x the 20 M
@@ -415,14 +390,6 @@ object ScaleBench {
       // arm; the bucketed write is untimed layout investment.
       if (blockOn("kcore_arms")) locally {
         import graft.queries.Parity24
-        def noopSave(df: DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        def best2(f: => Unit): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
           case (c, dir) =>
             val ep = s"target/kc_edges_x$c"
@@ -433,10 +400,10 @@ object ScaleBench {
               .unionAll(pairs.select(col("v").as("node"), col("u").as("nbr")))
             val tbl = s"kc_adj_x$c"
             sources.Sinks.writeBucketed(adj, tbl, "node", 32)
-            val bcast = best2(noopSave(Parity24.kcorePeel(pairs, 80, 6)))
-            val msgPlain = best2(noopSave(ops.Connect.kcorePeelMsg(adj, 80, 6)))
-            val msgBuck = best2(noopSave(ops.Connect.kcorePeelMsg(
-              spark.table(tbl).select(col("node"), col("nbr")), 80, 6)))
+            val bcast = best(2)(noop(Parity24.kcorePeel(pairs, 80, 6)))._2
+            val msgPlain = best(2)(noop(ops.Connect.kcorePeelMsg(adj, 80, 6)))._2
+            val msgBuck = best(2)(noop(ops.Connect.kcorePeelMsg(
+              spark.table(tbl).select(col("node"), col("nbr")), 80, 6)))._2
             f""""x$c":{"broadcast_sec":$bcast%.2f,""" +
               f""""msg_plain_sec":$msgPlain%.2f,""" +
               f""""msg_bucketed_sec":$msgBuck%.2f}"""
@@ -454,7 +421,7 @@ object ScaleBench {
       // shape is exactly the query's.
       if (blockOn("kmv_cut")) locally {
         val k = 64
-        def kmvCut(dir: String, heap: Boolean): Unit = {
+        def kmvCut(dir: String, heap: Boolean): DataFrame = {
           val hashed = spark.read.parquet(s"$dir/events.parquet")
             .select(col("event_type"),
               ops.TextOps.polyHash60(col("event_id").cast("string")).as("h"))
@@ -471,17 +438,21 @@ object ScaleBench {
             }
           cut.groupBy(col("event_type"))
             .agg(max(col("h")).as("hk"), count(lit(1)).as("n_min"))
-            .write.format("noop").mode("overwrite").save()
         }
-        def best2(dir: String, heap: Boolean): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); kmvCut(dir, heap)
-            (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
+        def bestSec(dir: String, heap: Boolean): Double =
+          best(2)(noop(kmvCut(dir, heap)))._2
         val kmv = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
-          case (c, dir) => (c, best2(dir, heap = false), best2(dir, heap = true))
+          case (c, dir) =>
+            // the stock arm: on the factory session TopKRewriteRule would
+            // turn the window into the heap, so it runs with the rule off
+            val window = withConf(spark, plans.TopKRewriteRule.Off) {
+              val plan = kmvCut(dir, heap = false)
+                .queryExecution.optimizedPlan.toString
+              require(plan.contains("Window") && !plan.contains("TopKPerKey"),
+                s"kmv_cut stock arm must plan the window:\n$plan")
+              bestSec(dir, heap = false)
+            }
+            (c, window, bestSec(dir, heap = true))
         }
         val js = kmv.map { case (c, w, h) =>
           f""""x$c":{"window_sec":$w%.2f,"heap_sec":$h%.2f,"ratio":${w / h}%.2f}"""
@@ -504,14 +475,6 @@ object ScaleBench {
       // pair joins grow quadratically in clone multiplicity — same
       // artifact as x2_minhash_lsh's SkipAt100.)
       if (blockOn("mh_incr")) locally {
-        def timed(f: => Long): (Long, Double) = {
-          val t0 = System.nanoTime(); val n = f
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        def best2(f: => Long): (Long, Double) = {
-          val a = timed(f); val b = timed(f)
-          (a._1, math.min(a._2, b._2))
-        }
         val tiersJs = Seq(1 -> "target/sf01rw", 10 -> "target/sf1").map {
           case (c, dir) =>
             val docs = Tables.documents(spark, dir)
@@ -531,10 +494,10 @@ object ScaleBench {
             val idx = ops.Dedup.MinHashIndex(
               spark.read.parquet(s"$idxDir/bands.parquet"),
               spark.read.parquet(s"$idxDir/sets.parquet"))
-            val (nIncr, incrSec) = best2 {
+            val (nIncr, incrSec) = best(2) {
               ops.Dedup.minhashNearDupPairsIncremental(batch, idx).count()
             }
-            val (nFull, fullSec) = best2 {
+            val (nFull, fullSec) = best(2) {
               ops.Dedup.minhashNearDupPairs(docs)
                 .filter((col("id_a") < Offset && col("id_a") % 10 >= 8) ||
                   (col("id_b") < Offset && col("id_b") % 10 >= 8))
@@ -561,11 +524,8 @@ object ScaleBench {
       // the occupancy prune in the x2_stream_neardup batch replay.
       if (blockOn("stream_state")) locally {
         import org.apache.spark.sql.streaming.Trigger
-        val prevProvider =
-          spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           val nB = 8
           def stage(dir: String, df: DataFrame, splitCol: String): Unit =
             if (!Files.exists(Paths.get(dir))) (0 until nB).foreach { i =>
@@ -613,13 +573,6 @@ object ScaleBench {
             })
           System.err.println(
             s"""[scalebench] {"stream_state":{"dedup":$dedupJs,"neardup":$ndJs}}""")
-        } finally {
-          prevProvider match {
-            case Some(p) => spark.conf
-              .set("spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf
-              .unset("spark.sql.streaming.stateStore.providerClass")
-          }
         }
       }
 
@@ -636,32 +589,23 @@ object ScaleBench {
       // by kcore_arms above.
       if (blockOn("adj_arm")) locally {
         import graft.queries.Parity24
-        def noopSave(df: DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        def best2(f: => Unit): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
           case (c, dir) =>
             val ep = s"target/adj_edges_x$c"
-            val t0 = System.nanoTime()
-            Parity24.edges(spark, dir).write.mode("overwrite").parquet(ep)
-            val matSec = (System.nanoTime() - t0) / 1e9
-            val derived = best2(noopSave(
-              Parity24.kcorePeel(Parity24.edges(spark, dir), 80, 6)))
+            val (_, matSec) = secs(
+              Parity24.edges(spark, dir).write.mode("overwrite").parquet(ep))
+            val derived = best(2)(noop(
+              Parity24.kcorePeel(Parity24.edges(spark, dir), 80, 6)))._2
             // plain parquet arm: every peel round re-plans from the
             // parquet relation, so the 120 M-edge scan is paid per
             // round — the apples-to-apples arm for an ITERATIVE
             // consumer reads once and lineage-truncates, exactly what
             // the derived path's edges() already does internally
-            val mat = best2(noopSave(
-              Parity24.kcorePeel(spark.read.parquet(ep), 80, 6)))
-            val matCached = best2(noopSave(Parity24.kcorePeel(
+            val mat = best(2)(noop(
+              Parity24.kcorePeel(spark.read.parquet(ep), 80, 6)))._2
+            val matCached = best(2)(noop(Parity24.kcorePeel(
               graft.ops.Iter.truncate(spark.read.parquet(ep), None),
-              80, 6)))
+              80, 6)))._2
             val saving = derived - math.min(mat, matCached)
             val cross =
               if (saving > 0) f"${matSec / saving}%.1f" else "null"
@@ -688,22 +632,15 @@ object ScaleBench {
         val js = Seq(1 -> "target/sf01rw", 10 -> "target/sf1",
           100 -> "target/sf10").map { case (c, dir) =>
           val p = s"target/vt_ev_x$c"
-          val fsp = new org.apache.hadoop.fs.Path(p)
-          val fs = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(fsp)) fs.delete(fsp, true)
+          rmrf(spark, p)
           val ev = spark.read.parquet(s"$dir/events.parquet")
-          val t0 = System.nanoTime()
-          VersionedTable.commit(spark, p, ev, 0L)
-          val buildSec = (System.nanoTime() - t0) / 1e9
+          val (_, buildSec) = secs(VersionedTable.commit(spark, p, ev, 0L))
           val updates = ev
             .filter(col("event_id") < Offset && col("event_id") % 10 === 7)
             .withColumn("event_type", concat(lit("v2_"), col("event_type")))
-          val t1 = System.nanoTime()
-          VersionedTable.merge(spark, p, updates, "event_id")
-          val mergeSec = (System.nanoTime() - t1) / 1e9
-          val t2 = System.nanoTime()
-          VersionedTable.optimize(spark, p)
-          val optSec = (System.nanoTime() - t2) / 1e9
+          val (_, mergeSec) =
+            secs(VersionedTable.merge(spark, p, updates, "event_id"))
+          val (_, optSec) = secs(VersionedTable.optimize(spark, p))
           val nRows = VersionedTable.read(spark, p).get.count()
           f""""x$c":{"rows":$nRows,"build_sec":$buildSec%.2f,""" +
             f""""merge_sec":$mergeSec%.2f,"optimize_sec":$optSec%.2f}"""
@@ -727,10 +664,7 @@ object ScaleBench {
           case (c, dir) =>
             val ev = spark.read.parquet(s"$dir/events.parquet")
             def build(p: String): Unit = {
-              val fsp = new org.apache.hadoop.fs.Path(p)
-              val fsx = fsp.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              if (fsx.exists(fsp)) fsx.delete(fsp, true)
+              rmrf(spark, p)
               var v = 0L
               (0 until c).foreach { i =>
                 v = VersionedTable.commit(spark, p,
@@ -745,13 +679,10 @@ object ScaleBench {
             val pF = s"target/vtp_full_x$c"
             val pP = s"target/vtp_pruned_x$c"
             build(pF); build(pP)
-            val t0 = System.nanoTime()
-            VersionedTable.merge(spark, pF, updates, "event_id")
-            val fullSec = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val (_, rewritten) =
-              VersionedTable.mergePruned(spark, pP, updates, "event_id")
-            val prunedSec = (System.nanoTime() - t1) / 1e9
+            val (_, fullSec) =
+              secs(VersionedTable.merge(spark, pF, updates, "event_id"))
+            val ((_, rewritten), prunedSec) =
+              secs(VersionedTable.mergePruned(spark, pP, updates, "event_id"))
             val nF = VersionedTable.read(spark, pF).get.count()
             val nP = VersionedTable.read(spark, pP).get.count()
             require(nF == nP, s"pruned rows $nP != full $nF")
@@ -777,48 +708,43 @@ object ScaleBench {
           .select(col("event_id"), col("user_id"), col("event_type"))
           .cache()
         val batchRows = batch.count()
-        def clean(p: String): Unit = {
-          val fsp = new org.apache.hadoop.fs.Path(p)
-          val fsx = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsx.exists(fsp)) fsx.delete(fsp, true)
-        }
         val appends = 4
         def run(writers: Int, stageOnce: Boolean): (Double, Long, Long) = {
           val p = s"target/ccont_${writers}_$stageOnce"
-          clean(p)
+          rmrf(spark, p)
           VersionedTable.commit(spark, p, batch.limit(1), 0L)
           val conflicts = new java.util.concurrent.atomic.AtomicLong(0)
           val stagings = new java.util.concurrent.atomic.AtomicLong(0)
           val barrier = new java.util.concurrent.CyclicBarrier(writers)
-          val t0 = System.nanoTime()
-          val threads = (0 until writers).map { _ =>
-            new Thread(() => {
-              barrier.await()
-              (0 until appends).foreach { _ =>
-                if (stageOnce) {
-                  stagings.incrementAndGet()
-                  val (_, lost) =
-                    VersionedTable.commitAppendWithRetry(spark, p, batch)
-                  conflicts.addAndGet(lost.toLong)
-                } else {
-                  var done = false
-                  while (!done) {
+          val (_, sec) = secs {
+            val threads = (0 until writers).map { _ =>
+              new Thread(() => {
+                barrier.await()
+                (0 until appends).foreach { _ =>
+                  if (stageOnce) {
                     stagings.incrementAndGet()
-                    val v = VersionedTable.currentVersion(spark, p)
-                    try {
-                      VersionedTable.commit(spark, p, batch, v)
-                      done = true
-                    } catch {
-                      case _: VersionedTable.CommitConflictException =>
-                        conflicts.incrementAndGet()
+                    val (_, lost) =
+                      VersionedTable.commitAppendWithRetry(spark, p, batch)
+                    conflicts.addAndGet(lost.toLong)
+                  } else {
+                    var done = false
+                    while (!done) {
+                      stagings.incrementAndGet()
+                      val v = VersionedTable.currentVersion(spark, p)
+                      try {
+                        VersionedTable.commit(spark, p, batch, v)
+                        done = true
+                      } catch {
+                        case _: VersionedTable.CommitConflictException =>
+                          conflicts.incrementAndGet()
+                      }
                     }
                   }
                 }
-              }
-            })
+              })
+            }
+            threads.foreach(_.start()); threads.foreach(_.join())
           }
-          threads.foreach(_.start()); threads.foreach(_.join())
-          val sec = (System.nanoTime() - t0) / 1e9
           // exactly-once: every append is exactly one version
           val vHead = VersionedTable.currentVersion(spark, p)
           require(vHead == 1 + writers * appends,
@@ -868,26 +794,21 @@ object ScaleBench {
         val js = Seq(100000L, 1000000L, 10000000L).map { n =>
           val links = planted(n).cache()
           links.count()
-          val t0 = System.nanoTime()
-          val viaDouble = graft.ops.ListRank.ranks(links)
-            .agg(sum(col("rank"))).head().getLong(0)
-          val dblSec = (System.nanoTime() - t0) / 1e9
-          val tC = System.nanoTime()
-          val viaContract = graft.ops.ListRank.ranksByContraction(links)
-            .agg(sum(col("rank"))).head().getLong(0)
-          val ctrSec = (System.nanoTime() - tC) / 1e9
+          val (viaDouble, dblSec) = secs(graft.ops.ListRank.ranks(links)
+            .agg(sum(col("rank"))).head().getLong(0))
+          val (viaContract, ctrSec) = secs(
+            graft.ops.ListRank.ranksByContraction(links)
+              .agg(sum(col("rank"))).head().getLong(0))
           require(viaContract == viaDouble,
             s"contraction checksum mismatch: $viaContract vs $viaDouble")
-          val t1 = System.nanoTime()
           // window arm: global order reconstructed from the pointer
           // relation is itself the hard part; give the window its
           // best case (order column already at hand) and STILL time it
-          val viaWindow = spark.range(1, n + 1)
+          val (viaWindow, winSec) = secs(spark.range(1, n + 1)
             .select((org.apache.spark.sql.functions.row_number().over(
               org.apache.spark.sql.expressions.Window.orderBy(col("id")))
               - 1).cast("long").as("r"))
-            .agg(sum(col("r"))).head().getLong(0)
-          val winSec = (System.nanoTime() - t1) / 1e9
+            .agg(sum(col("r"))).head().getLong(0))
           links.unpersist()
           require(viaDouble == viaWindow,
             s"rank checksum mismatch: $viaDouble vs $viaWindow")
@@ -910,10 +831,7 @@ object ScaleBench {
             val ev = spark.read.parquet(s"$dir/events.parquet")
               .select(col("event_id"), col("user_id"), col("event_type"))
             val p = s"target/feedt_x$c"
-            val fsp = new org.apache.hadoop.fs.Path(p)
-            val fsx = fsp.getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            if (fsx.exists(fsp)) fsx.delete(fsp, true)
+            rmrf(spark, p)
             var v = 0L
             (0 until c).foreach { i =>
               v = VersionedTable.commit(spark, p,
@@ -927,15 +845,11 @@ object ScaleBench {
               .withColumn("event_type", concat(lit("v2_"), col("event_type")))
             val (vTo, rewritten) =
               VersionedTable.mergePruned(spark, p, updates, "event_id")
-            def timeFeed(skip: Boolean): (Double, Long) = {
-              val t0 = System.nanoTime()
-              val n = VersionedTable
-                .changeFeed(spark, p, "event_id", v, vTo, skipShared = skip)
-                .count()
-              ((System.nanoTime() - t0) / 1e9, n)
-            }
-            val (skipSec, nSkip) = timeFeed(skip = true)
-            val (fullSec, nFull) = timeFeed(skip = false)
+            def timeFeed(skip: Boolean): (Long, Double) = secs(VersionedTable
+              .changeFeed(spark, p, "event_id", v, vTo, skipShared = skip)
+              .count())
+            val (nSkip, skipSec) = timeFeed(skip = true)
+            val (nFull, fullSec) = timeFeed(skip = false)
             require(nSkip == nFull, s"skip changed the feed: $nSkip/$nFull")
             f""""x$c":{"groups":$c,"rewritten":$rewritten,""" +
               f""""changes":$nSkip,"skip_sec":$skipSec%.2f,""" +
@@ -968,10 +882,8 @@ object ScaleBench {
         val js = Seq((16, 32), (16, 320), (160, 320)).map {
           case (ng, rs) =>
             val (nodes, edges) = planted(ng, rs)
-            val t0 = System.nanoTime()
-            val ids = graft.ops.Scc.components(nodes, edges)
-            val nScc = ids.select(col("scc_id")).distinct().count()
-            val sec = (System.nanoTime() - t0) / 1e9
+            val (nScc, sec) = secs(graft.ops.Scc.components(nodes, edges)
+              .select(col("scc_id")).distinct().count())
             require(nScc == ng, s"expected $ng components, got $nScc")
             f""""n${ng * rs}":{"groups":$ng,"ring":$rs,""" +
               f""""scc_sec":$sec%.2f}"""
@@ -987,23 +899,13 @@ object ScaleBench {
       // decode+hash map stage, so the delta is purely the pairing
       // strategy.
       if (blockOn("phash_class")) locally {
-        def noopSave(df: DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        def best2(f: => Unit): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
           case (c, dir) =>
             def hashes = ops.Multimodal.decodeDHash(spark,
               ops.Multimodal.synthVariantImages(spark,
                 Tables.documents(spark, dir)))
-            val naive = best2(noopSave(
-              ops.Multimodal.phashNearDupPairs(hashes)))
-            val byClass = best2(noopSave(
-              ops.Multimodal.phashClassPairs(hashes)))
+            val naive = best(2)(noop(ops.Multimodal.phashNearDupPairs(hashes)))._2
+            val byClass = best(2)(noop(ops.Multimodal.phashClassPairs(hashes)))._2
             f""""x$c":{"naive_sec":$naive%.2f,""" +
               f""""class_sec":$byClass%.2f,""" +
               f""""speedup":${naive / byClass}%.2f}"""
@@ -1024,14 +926,6 @@ object ScaleBench {
       // Mirrors the kcore_arms block; SCALE.md records the crossover
       // reasoning.
       if (blockOn("rank_arms")) locally {
-        def best2(f: => DataFrame): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime()
-            f.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         // x9_pagerank now ROUTES through the advisor (round-13
         // verdict item 4), so the fixed arms are addressed directly —
         // the named query would silently measure whichever arm the
@@ -1040,16 +934,16 @@ object ScaleBench {
           ("x9_pagerank",
             (dir, msg) => graft.queries.Parity19.pagerankQ(spark, dir, msg)),
           ("x9_label_prop",
-            (dir, msg) => SparkEntry.queries(
+            (dir, msg) => queries(
               if (msg) "x9_label_prop_msg" else "x9_label_prop")(spark, dir)),
           ("x9_hits",
-            (dir, msg) => SparkEntry.queries(
+            (dir, msg) => queries(
               if (msg) "x9_hits_msg" else "x9_hits")(spark, dir)))
         val js = arms.map { case (op, mk) =>
           val parts = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
             case (c, dir) =>
-              val b = best2(mk(dir, false))
-              val m = best2(mk(dir, true))
+              val b = best(2)(noop(mk(dir, false)))._2
+              val m = best(2)(noop(mk(dir, true)))._2
               f""""x$c":{"broadcast_sec":$b%.2f,"msg_sec":$m%.2f,""" +
                 f""""msg_over_broadcast":${m / b}%.2f}"""
           }.mkString(",")
@@ -1066,24 +960,16 @@ object ScaleBench {
       // crossover). The require() IS the claim; routed_sec times
       // x9_pagerank as shipped (advisor choice in effect).
       if (blockOn("rank_advisor")) locally {
-        def best2(f: => Unit): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val js = Seq(1 -> "target/sf01rw", 10 -> "target/sf1",
           100 -> "target/sf10").map { case (c, dir) =>
-          val row = SparkEntry.queries("x9_rank_advisor")(spark, dir).head()
+          val row = queries("x9_rank_advisor")(spark, dir).head()
           val nodes = row.getAs[Long]("n_nodes_est")
           val arm = row.getAs[String]("arm")
           val expect = if (c == 1) "broadcast" else "msg"
           require(arm == expect,
             s"advisor picked $arm at x$c ($nodes nodes); measured " +
               s"rank_arms crossover says $expect")
-          val routed = best2(
-            SparkEntry.queries("x9_pagerank")(spark, dir)
-              .write.format("noop").mode("overwrite").save())
+          val routed = best(2)(run("x9_pagerank", dir))._2
           f""""x$c":{"nodes_est":$nodes,"arm":"$arm",""" +
             f""""routed_sec":$routed%.2f}"""
         }.mkString(",")
@@ -1099,12 +985,6 @@ object ScaleBench {
       // per mergeSchema query; evolution reconciles ONCE at commit
       // (s16/s17) and the CATALOG owns the schema thereafter.
       if (blockOn("schema_merge_cost")) locally {
-        def best2(f: => Unit): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val ev = spark.read.parquet("target/sf1/events.parquet")
         val pinned = ev.schema
         val js = Seq(500, 4000).map { nf =>
@@ -1117,10 +997,10 @@ object ScaleBench {
           // .schema forces inference WITHOUT scanning data — the
           // probe isolates plan-time footer I/O from the (identical)
           // scan cost all three arms would share
-          val dflt = best2(spark.read.parquet(p).schema)
-          val merged = best2(
+          val (_, dflt) = best(2)(spark.read.parquet(p).schema)
+          val (_, merged) = best(2)(
             spark.read.option("mergeSchema", "true").parquet(p).schema)
-          val pin = best2(spark.read.schema(pinned).parquet(p).schema)
+          val (_, pin) = best(2)(spark.read.schema(pinned).parquet(p).schema)
           f""""files$nf":{"default_sec":$dflt%.2f,"merge_sec":$merged%.2f,""" +
             f""""pinned_sec":$pin%.2f,"merge_over_pinned":${merged / pin}%.2f}"""
         }.mkString(",")
@@ -1140,23 +1020,6 @@ object ScaleBench {
       // beats even split partitions). require() pins all three arms
       // to the same aggregate — mitigation must never change results.
       if (blockOn("skew_arms")) locally {
-        def best2(f: => Long): (Long, Double) = {
-          def once: (Long, Double) = {
-            val t0 = System.nanoTime(); val s = f
-            (s, (System.nanoTime() - t0) / 1e9)
-          }
-          val a = once; val b = once
-          (a._1, math.min(a._2, b._2))
-        }
-        def withConf(kv: (String, String)*)(body: => (Long, Double))
-            : (Long, Double) = {
-          val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-          kv.foreach { case (k, v) => spark.conf.set(k, v) }
-          try body finally prev.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
-        }
         // thresholds scaled to the sandbox (defaults trigger at
         // 256 MB): advisory sets the SPLIT GRANULARITY — it is the
         // AQE-side analog of the salt factor, and the first run of
@@ -1197,15 +1060,15 @@ object ScaleBench {
                 else left.join(dim.hint("merge"), Seq("k"))
               j.agg(sum(col("v") * col("w"))).head().getLong(0)
             }
-            val (sPlain, tPlain) = withConf(tuned :+
+            val (sPlain, tPlain) = withConf(spark, tuned :+
               ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*)(
-              best2(sumJoin(salted = false)))
-            val (sAqe, tAqe) = withConf(tuned :+
+              best(2)(sumJoin(salted = false)))
+            val (sAqe, tAqe) = withConf(spark, tuned :+
               ("spark.sql.adaptive.skewJoin.enabled" -> "true"): _*)(
-              best2(sumJoin(salted = false)))
-            val (sSalt, tSalt) = withConf(tuned :+
+              best(2)(sumJoin(salted = false)))
+            val (sSalt, tSalt) = withConf(spark, tuned :+
               ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*)(
-              best2(sumJoin(salted = true)))
+              best(2)(sumJoin(salted = true)))
             require(sPlain == sAqe && sAqe == sSalt,
               s"skew mitigation changed results: $sPlain/$sAqe/$sSalt")
             f""""x$c":{"no_mitigation_sec":$tPlain%.2f,""" +
@@ -1235,21 +1098,12 @@ object ScaleBench {
         // materializes FULL rows, so a non-skipped group pays all
         // five columns while a skipped one pays a footer check
         val RowGroupBytes = 256 * 1024
-        def best2(f: => Unit): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
           case (c, dir) =>
             val ev = spark.read.parquet(s"$dir/events.parquet")
             val rowsPerGroup = 6000L // ~256 KiB of events rows
-            def writeTimed(p: String)(w: => Unit): Double = {
-              if (Files.exists(Paths.get(p))) return -1.0
-              val t0 = System.nanoTime(); w
-              (System.nanoTime() - t0) / 1e9
-            }
+            def writeTimed(p: String)(w: => Unit): Double =
+              if (Files.exists(Paths.get(p))) -1.0 else secs(w)._2
             val plainP = s"target/bl_plain_x$c"
             val wPlain = writeTimed(plainP) {
               ev.repartition(32).write
@@ -1275,13 +1129,10 @@ object ScaleBench {
             val present = (0 until math.min(c, 8))
               .map(i => i * Offset + 12345L)
             val absent = (0 until 8).map(i => 50000000L + i)
-            def probe(p: String, keys: Seq[Long]): Double = best2 {
-              // full-row materialization: a non-skipped row group
-              // decodes every column, a skipped one costs its footer
-              spark.read.parquet(p)
-                .filter(col("event_id").isin(keys: _*))
-                .write.format("noop").mode("overwrite").save()
-            }
+            // full-row materialization: a non-skipped row group
+            // decodes every column, a skipped one costs its footer
+            def probe(p: String, keys: Seq[Long]): Double = best(2)(noop(
+              spark.read.parquet(p).filter(col("event_id").isin(keys: _*))))._2
             val parts = Seq("plain" -> plainP, "bloom" -> bloomP,
               "zone" -> zoneP).map { case (tag, p) =>
               f""""$tag":{"present_sec":${probe(p, present)}%.3f,""" +
@@ -1309,26 +1160,19 @@ object ScaleBench {
       // spans most of a replica).
       if (blockOn("harmonic")) locally {
         import graft.queries.Parity64
-        def statsRun(dir: String, depth: Int, hex: String)
+        /** min-of-`n` (seconds, sources, state rows, max reach) */
+        def statsRun(dir: String, depth: Int, hex: String, n: Int = 2)
             : (Double, Long, Long, Long) = {
-          val t0 = System.nanoTime()
-          val r = Parity64.harmonicRun(spark, dir, depth, hex)
+          val (r, sec) = best(n)(Parity64.harmonicRun(spark, dir, depth, hex)
             .agg(count(lit(1)).as("n_src"),
               sum(col("n_reached")).as("reached"),
-              max(col("n_reached")).as("max_reach")).head()
-          val sec = (System.nanoTime() - t0) / 1e9
+              max(col("n_reached")).as("max_reach")).head())
           (sec, r.getLong(0), r.getLong(1) + r.getLong(0), r.getLong(2))
         }
-        def best2(dir: String, depth: Int, hex: String)
-            : (Double, Long, Long, Long) = {
-          val a = statsRun(dir, depth, hex)
-          val b = statsRun(dir, depth, hex)
-          if (a._1 <= b._1) a else b
-        }
         // tier rows (defaults): min-of-2 at 1x/10x, single at 100x
-        val t1 = best2("target/sf01rw", 2, "007")
-        val t10 = best2("target/sf1", 2, "007")
-        val t100 = statsRun("target/sf10", 2, "007")
+        val t1 = statsRun("target/sf01rw", 2, "007")
+        val t10 = statsRun("target/sf1", 2, "007")
+        val t100 = statsRun("target/sf10", 2, "007", n = 1)
         // replicas are DISJOINT, so no source can ever reach outside
         // its own replica: per-source state is bounded by one
         // replica's node universe (<= its part count) at EVERY tier —
@@ -1350,7 +1194,7 @@ object ScaleBench {
           (dTag, depth) <- Seq("d2" -> 2, "d3" -> 3)
           (sTag, hex) <- Seq("s512" -> "007", "s128" -> "01f")
         } yield {
-          val g = best2("target/sf01rw", depth, hex)
+          val g = statsRun("target/sf01rw", depth, hex)
           f""""${dTag}_$sTag":{"sec":${g._1}%.2f,"sources":${g._2},""" +
             f""""state_rows":${g._3},"max_reach":${g._4}}"""
         }
@@ -1372,24 +1216,17 @@ object ScaleBench {
       // arms bit-equal on (sources, total harm).
       if (blockOn("harmonic_arms")) locally {
         import graft.queries.Parity64
-        def armRun(dir: String, msg: Boolean): (Double, Long, Long) = {
-          val t0 = System.nanoTime()
-          val r = Parity64.harmonicRun(spark, dir, 2, "007",
+        /** min-of-`n` (seconds, sources, total harm) */
+        def armRun(dir: String, msg: Boolean, n: Int): (Double, Long, Long) = {
+          val (r, sec) = best(n)(Parity64.harmonicRun(spark, dir, 2, "007",
               msgOverride = Some(msg))
-            .agg(count(lit(1)), sum(col("harm_milli"))).head()
-          ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
+            .agg(count(lit(1)), sum(col("harm_milli"))).head())
+          (sec, r.getLong(0), r.getLong(1))
         }
-        def best2(dir: String, msg: Boolean): (Double, Long, Long) = {
-          val a = armRun(dir, msg); val b = armRun(dir, msg)
-          if (a._1 <= b._1) a else b
-        }
-        val parts = Seq(
-          (10, "target/sf1", true), (100, "target/sf10", false)).map {
-          case (c, dir, twice) =>
-            val b = if (twice) best2(dir, msg = false)
-              else armRun(dir, msg = false)
-            val m = if (twice) best2(dir, msg = true)
-              else armRun(dir, msg = true)
+        val parts = Seq((10, "target/sf1", 2), (100, "target/sf10", 1)).map {
+          case (c, dir, n) =>
+            val b = armRun(dir, msg = false, n)
+            val m = armRun(dir, msg = true, n)
             require(b._2 == m._2 && b._3 == m._3,
               s"arms disagree at x$c: broadcast ${b._2}/${b._3} vs " +
                 s"msg ${m._2}/${m._3}")
@@ -1411,13 +1248,6 @@ object ScaleBench {
       // in rows; the extra stats columns ride the same single scan.
       if (blockOn("xstats_write")) locally {
         import graft.sources.VersionedTable
-        def commitOnce(df: DataFrame, tag: String): Double = {
-          val p = java.nio.file.Files
-            .createTempDirectory(s"xstats$tag").toString
-          val t0 = System.nanoTime()
-          VersionedTable.commit(spark, p, df, 0L, statsCol = Some("k"))
-          (System.nanoTime() - t0) / 1e9
-        }
         def wide(rows: Long) = spark.range(rows).toDF("k")
           .select(col("k") +: (1 to 8).map(i =>
             (col("k") * i).as(s"c$i")): _*)
@@ -1425,16 +1255,14 @@ object ScaleBench {
           .withColumn("payload",
             concat_ws("-", (1 to 8).map(i =>
               (col("k") * i).cast("string")): _*))
-        def best2(mk: Long => DataFrame, rows: Long,
-            tag: String): Double = {
-          val a = commitOnce(mk(rows), tag)
-          val b = commitOnce(mk(rows), tag)
-          math.min(a, b)
-        }
+        def commitSec(mk: Long => DataFrame, rows: Long, tag: String): Double =
+          best(2)(VersionedTable.commit(spark,
+            Files.createTempDirectory(s"xstats$tag").toString, mk(rows), 0L,
+            statsCol = Some("k")))._2
         val parts = Seq(1000000L -> "x1", 10000000L -> "x10").map {
           case (rows, t) =>
-            val w = best2(wide, rows, s"w$t")
-            val s0 = best2(text, rows, s"t$t")
+            val w = commitSec(wide, rows, s"w$t")
+            val s0 = commitSec(text, rows, s"t$t")
             f""""$t":{"wide8_sec":$w%.2f,"text0_sec":$s0%.2f,""" +
               f""""stats_overhead":${w / s0}%.2f,"rows":$rows}"""
         }.mkString(",")
@@ -1452,20 +1280,12 @@ object ScaleBench {
       // construction (same arithmetic, same oracle).
       if (blockOn("hits_copies")) locally {
         import graft.queries.Parity39
-        def best2(f: => DataFrame): Double = {
-          def once: Double = {
-            val t0 = System.nanoTime()
-            f.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once, once)
-        }
         val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
           case (c, dir) =>
-            val b = best2(Parity39.hitsQ(spark, dir, msg = false))
-            val two = best2(Parity39.hitsQ(spark, dir, msg = true))
-            val one = best2(Parity39.hitsQ(spark, dir, msg = true,
-              oneCopy = true))
+            val b = best(2)(noop(Parity39.hitsQ(spark, dir, msg = false)))._2
+            val two = best(2)(noop(Parity39.hitsQ(spark, dir, msg = true)))._2
+            val one = best(2)(noop(Parity39.hitsQ(spark, dir, msg = true,
+              oneCopy = true)))._2
             f""""x$c":{"broadcast_sec":$b%.2f,"two_copy_sec":$two%.2f,""" +
               f""""one_copy_sec":$one%.2f,""" +
               f""""one_over_two":${one / two}%.2f}"""
@@ -1496,11 +1316,8 @@ object ScaleBench {
           }
           (hubAdj ++ bg).toDF("node", "nb")
         }
-        def run(hub: Int, paths: Int, dMax: Option[Long]): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val n = Parity25.wedgePairs(planted(hub, paths), dMax).count()
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
+        def run(hub: Int, paths: Int, dMax: Option[Long]): (Long, Double) =
+          secs(Parity25.wedgePairs(planted(hub, paths), dMax).count())
         val js = Seq(2000, 8000).map { hub =>
           val paths = 1000
           val (nUncap, tUncap) = run(hub, paths, None)
@@ -1532,11 +1349,8 @@ object ScaleBench {
             (col("id") % 25).cast("int").as("nat"),
             (((col("id") * 2654435761L) % 1000000L).cast("double") / 100.0)
               .as("bal"))
-        def run(n: Long, width: Double): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val c = Parity73.candidatePairs(recs(n), width).count()
-          (c, (System.nanoTime() - t0) / 1e9)
-        }
+        def run(n: Long, width: Double): (Long, Double) =
+          secs(Parity73.candidatePairs(recs(n), width).count())
         val sizes = Seq(30000L, 300000L)
         val js = Seq("fixed" -> ((n: Long) => 100.0),
           "scaled" -> ((n: Long) => 10000.0 * 250.0 / n)).map {
@@ -1567,19 +1381,15 @@ object ScaleBench {
       // both: per-source reach replica-bounded, sources tracking the
       // universe.
       if (blockOn("betweenness_tiers")) locally {
-        def run(dir: String): (Double, Long, Long) = {
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries("x9_betweenness")(spark, dir)
-          val r = df.agg(count(lit(1)), max(col("n_paths"))).head()
-          ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
+        /** min-of-`n` (seconds, scored nodes, max paths) */
+        def run(dir: String, n: Int = 2): (Double, Long, Long) = {
+          val (r, sec) = best(n)(queries("x9_betweenness")(spark, dir)
+            .agg(count(lit(1)), max(col("n_paths"))).head())
+          (sec, r.getLong(0), r.getLong(1))
         }
-        def best2(dir: String): (Double, Long, Long) = {
-          val a = run(dir); val b = run(dir)
-          if (a._1 <= b._1) a else b
-        }
-        val t1 = best2("target/sf01rw")
-        val t10 = best2("target/sf1")
-        val t100 = run("target/sf10")
+        val t1 = run("target/sf01rw")
+        val t10 = run("target/sf1")
+        val t100 = run("target/sf10", n = 1)
         // interior nodes are replica-local, so the scored-node count
         // must track the tier like the seeds do
         require(t10._2 >= 8 * t1._2 && t100._2 >= 8 * t10._2,
@@ -1601,20 +1411,15 @@ object ScaleBench {
       // exactly (every co-purchase node has a neighbor, so no walk
       // dies early) — the require pins both laws.
       if (blockOn("walk_tiers")) locally {
-        def run(dir: String): (Double, Long, Long) = {
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries("x9_random_walk")(spark, dir)
-          val r = df.agg(count(lit(1)),
-            countDistinct(col("walk"))).head()
-          ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
+        /** min-of-`n` (seconds, trajectory rows, walks) */
+        def run(dir: String, n: Int = 2): (Double, Long, Long) = {
+          val (r, sec) = best(n)(queries("x9_random_walk")(spark, dir)
+            .agg(count(lit(1)), countDistinct(col("walk"))).head())
+          (sec, r.getLong(0), r.getLong(1))
         }
-        def best2(dir: String): (Double, Long, Long) = {
-          val a = run(dir); val b = run(dir)
-          if (a._1 <= b._1) a else b
-        }
-        val t1 = best2("target/sf01rw")
-        val t10 = best2("target/sf1")
-        val t100 = run("target/sf10")
+        val t1 = run("target/sf01rw")
+        val t10 = run("target/sf1")
+        val t100 = run("target/sf10", n = 1)
         Seq(t1, t10, t100).foreach { t =>
           require(t._2 == 5 * t._3,
             s"every walk must run the full 4 steps: rows ${t._2} vs " +
@@ -1642,17 +1447,12 @@ object ScaleBench {
       // property of the rebase arm.
       if (blockOn("merge_rebase")) locally {
         import graft.sources.VersionedTable
-        def clean(p: String): Unit = {
-          val fsp = new org.apache.hadoop.fs.Path(p)
-          val fsx = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsx.exists(fsp)) fsx.delete(fsp, true)
-        }
         val appWriters = 4
         val appEach = 6
         val baseN = 200000L
         def run(rebase: Boolean): (Double, Long, Long) = {
           val p = s"target/mrebase_$rebase"
-          clean(p)
+          rmrf(spark, p)
           var v = 0L
           (0L until 4L).foreach { i =>
             v = VersionedTable.commit(spark, p,
@@ -1683,29 +1483,29 @@ object ScaleBench {
           }
           appenders.foreach(_.start())
           barrier.await()
-          val t0 = System.nanoTime()
-          if (rebase) {
-            // every interloper append can cost one rebase, so the cap
-            // must cover the full appender workload (4 writers x 6
-            // appends can interleave one-per-retry = 24 rebases)
-            val (_, _, rb) =
-              VersionedTable.mergePrunedRebase(spark, p, updates, "k",
-                maxRebases = appWriters * appEach + 8)
-            stagings.incrementAndGet(); retries.set(rb.toLong)
-          } else {
-            var done = false
-            while (!done) {
-              stagings.incrementAndGet()
-              try {
-                VersionedTable.mergePruned(spark, p, updates, "k")
-                done = true
-              } catch {
-                case _: VersionedTable.CommitConflictException =>
-                  retries.incrementAndGet()
+          val (_, sec) = secs {
+            if (rebase) {
+              // every interloper append can cost one rebase, so the cap
+              // must cover the full appender workload (4 writers x 6
+              // appends can interleave one-per-retry = 24 rebases)
+              val (_, _, rb) =
+                VersionedTable.mergePrunedRebase(spark, p, updates, "k",
+                  maxRebases = appWriters * appEach + 8)
+              stagings.incrementAndGet(); retries.set(rb.toLong)
+            } else {
+              var done = false
+              while (!done) {
+                stagings.incrementAndGet()
+                try {
+                  VersionedTable.mergePruned(spark, p, updates, "k")
+                  done = true
+                } catch {
+                  case _: VersionedTable.CommitConflictException =>
+                    retries.incrementAndGet()
+                }
               }
             }
           }
-          val sec = (System.nanoTime() - t0) / 1e9
           appenders.foreach(_.join(120000))
           require(errs.isEmpty, s"appender failures: $errs")
           val got = VersionedTable.read(spark, p).get
@@ -1739,18 +1539,14 @@ object ScaleBench {
       // x9_triangles' Subset row (10.9 s → 101.0 s); 4 passes ≈ 7 min
       // would re-measure the same law.
       if (blockOn("ktruss_tiers")) locally {
+        /** min-of-2 (seconds, surviving edges, support sum) */
         def run(dir: String): (Double, Long, Long) = {
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries("x9_ktruss")(spark, dir)
-          val r = df.agg(count(lit(1)), sum(col("sup"))).head()
-          ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
+          val (r, sec) = best(2)(queries("x9_ktruss")(spark, dir)
+            .agg(count(lit(1)), sum(col("sup"))).head())
+          (sec, r.getLong(0), r.getLong(1))
         }
-        def best2(dir: String): (Double, Long, Long) = {
-          val a = run(dir); val b = run(dir)
-          if (a._1 <= b._1) a else b
-        }
-        val t1 = best2("target/sf01rw")
-        val t10 = best2("target/sf1")
+        val t1 = run("target/sf01rw")
+        val t10 = run("target/sf1")
         require(t10._2 >= 8 * t1._2 && t10._2 <= 12 * t1._2,
           s"disjoint replicas: surviving truss edges must track the " +
             s"tier linearly: ${t1._2} -> ${t10._2}")
@@ -1773,20 +1569,11 @@ object ScaleBench {
       // cost linear; reads after either arm agree (require-pinned).
       if (blockOn("dv_arms")) locally {
         import graft.sources.VersionedTable
-        def clean(p: String): Unit = {
-          val fsp = new org.apache.hadoop.fs.Path(p)
-          val fsx = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsx.exists(fsp)) fsx.delete(fsp, true)
-        }
-        def timed[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val a = f
-          (a, (System.nanoTime() - t0) / 1e9)
-        }
         // WIDE rows: the rewrite arm pays the payload bytes, the DV
         // arm's scan projects only the key column (columnar) and its
         // write is a 1000-key sidecar
         def build(p: String, rows: Long): Unit = {
-          clean(p)
+          rmrf(spark, p)
           var v = 0L
           val slice = rows / 4
           (0L until 4L).foreach { i =>
@@ -1806,9 +1593,9 @@ object ScaleBench {
           val pRw = s"target/dvarm_rw_$c"
           build(pDv, rows); build(pRw, rows)
           val ((_, nDv), dvSec) =
-            timed(VersionedTable.deleteKeys(spark, pDv, delKeys, "k"))
+            secs(VersionedTable.deleteKeys(spark, pDv, delKeys, "k"))
           val ((_, nRw), rwSec) =
-            timed(VersionedTable.deleteRange(spark, pRw, "k", 0L, 999L))
+            secs(VersionedTable.deleteRange(spark, pRw, "k", 0L, 999L))
           require(nDv == 1 && nRw == 1,
             s"both arms must touch exactly group 0: $nDv / $nRw")
           val a = VersionedTable.read(spark, pDv).get
@@ -1837,11 +1624,6 @@ object ScaleBench {
       // — the same linear term Delta pays in log replay).
       if (blockOn("index_tiers")) locally {
         import graft.sources.VersionedTable
-        def clean(p: String): Unit = {
-          val fsp = new org.apache.hadoop.fs.Path(p)
-          val fsx = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsx.exists(fsp)) fsx.delete(fsp, true)
-        }
         def scanned(df: DataFrame): Long = {
           // collect() (not a noop WRITE and not an agg): the write
           // command wraps the plan in its own QueryExecution and an
@@ -1859,7 +1641,7 @@ object ScaleBench {
         // already exhibits the flat law
         val out = Seq(8, 80).map { g =>
           val p = s"target/idxt_$g"
-          clean(p)
+          rmrf(spark, p)
           var v = 0L
           (0 until g).foreach { i =>
             // one file per group: the law under measurement is group
@@ -1870,11 +1652,9 @@ object ScaleBench {
                 .repartition(1),
               v, statsCol = Some("k"))
           }
-          val t0 = System.nanoTime()
-          val opened = scanned(
+          val (opened, sec) = secs(scanned(
             VersionedTable.readIndexed(spark, p, "k").get
-              .filter(col("k") >= 1500L && col("k") <= 2500L))
-          val sec = (System.nanoTime() - t0) / 1e9
+              .filter(col("k") >= 1500L && col("k") <= 2500L)))
           val total = scanned(VersionedTable.readIndexed(spark, p, "k").get)
           require(opened == 2 && total == g.toLong,
             s"flat-law violation at $g groups: opened $opened of $total")
@@ -1899,20 +1679,12 @@ object ScaleBench {
       // the structural requires ARE the law's falsifiable half.
       if (blockOn("bpe_tiers")) locally {
         def run(dir: String)
-            : (Double, Seq[(Long, String, String, Long, Long)]) = {
-          val t0 = System.nanoTime()
-          val rows = SparkEntry.queries("x4_bpe_train")(spark, dir)
+            : (Seq[(Long, String, String, Long, Long)], Double) =
+          best(2)(queries("x4_bpe_train")(spark, dir)
             .collect().map(r => (r.getLong(0), r.getString(1),
-              r.getString(2), r.getLong(3), r.getLong(4))).toSeq
-          ((System.nanoTime() - t0) / 1e9, rows)
-        }
-        def best2(dir: String)
-            : (Double, Seq[(Long, String, String, Long, Long)]) = {
-          val x = run(dir); val y = run(dir)
-          if (x._1 <= y._1) x else y
-        }
-        val (s1, r1) = best2("target/sf01rw")
-        val (s10, r10) = best2("target/sf1")
+              r.getString(2), r.getLong(3), r.getLong(4))).toSeq)
+        val (r1, s1) = run("target/sf01rw")
+        val (r10, s10) = run("target/sf1")
         require(r1.map(t => (t._1, t._2, t._3)) ==
           r10.map(t => (t._1, t._2, t._3)),
           s"merge sequence must be replica-invariant:\n$r1\nvs\n$r10")
@@ -1937,17 +1709,8 @@ object ScaleBench {
       // masked-not-rewritten shape and bit-equal content across arms.
       if (blockOn("merge_dv_arms")) locally {
         import graft.sources.VersionedTable
-        def clean(p: String): Unit = {
-          val fsp = new org.apache.hadoop.fs.Path(p)
-          val fsx = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fsx.exists(fsp)) fsx.delete(fsp, true)
-        }
-        def timed[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val a = f
-          (a, (System.nanoTime() - t0) / 1e9)
-        }
         def build(p: String, rows: Long): Unit = {
-          clean(p)
+          rmrf(spark, p)
           var v = 0L
           val slice = rows / 4
           (0L until 4L).foreach { i =>
@@ -1966,10 +1729,10 @@ object ScaleBench {
           val pDv = s"target/mdvarm_dv_$c"
           val pRw = s"target/mdvarm_rw_$c"
           build(pDv, rows); build(pRw, rows)
-          val ((_, masked, rewrote), dvSec) = timed(
+          val ((_, masked, rewrote), dvSec) = secs(
             VersionedTable.mergeDv(spark, pDv, updates, "k",
               maxDvFraction = 0.5))
-          val ((_, nRw), rwSec) = timed(
+          val ((_, nRw), rwSec) = secs(
             VersionedTable.mergePruned(spark, pRw, updates, "k"))
           require(masked == 1 && rewrote == 0 && nRw == 1,
             s"arms must touch exactly group 0: $masked/$rewrote vs $nRw")
@@ -1982,7 +1745,7 @@ object ScaleBench {
             s"arms must agree: ${a.getLong(0)}/${b.getLong(0)} rows, " +
               s"${a.getLong(1)}/${b.getLong(1)} pay")
           // the DV arm's read-side debt, priced: one masked-group scan
-          val (_, readSec) = timed(
+          val (_, readSec) = secs(
             VersionedTable.read(spark, pDv).get
               .agg(count(lit(1))).head())
           (c, rows, dvSec, rwSec, readSec)
@@ -2001,16 +1764,11 @@ object ScaleBench {
       // edge-linear (no triangle/wedge stream anywhere), so the
       // seconds should track the edge relation.
       if (blockOn("mis_ppr_tiers")) locally {
-        def run(name: String, dir: String, agg: DataFrame => (Long, Long))
-            : (Double, Long, Long) = {
-          val t0 = System.nanoTime()
-          val (a, b) = agg(SparkEntry.queries(name)(spark, dir))
-          ((System.nanoTime() - t0) / 1e9, a, b)
-        }
-        def best2(name: String, dir: String,
+        /** min-of-2 (seconds, both aggregates) */
+        def tier(name: String, dir: String,
             agg: DataFrame => (Long, Long)): (Double, Long, Long) = {
-          val x = run(name, dir, agg); val y = run(name, dir, agg)
-          if (x._1 <= y._1) x else y
+          val ((a, b), sec) = best(2)(agg(queries(name)(spark, dir)))
+          (sec, a, b)
         }
         val misAgg = (df: DataFrame) => {
           val r = df.agg(
@@ -2023,13 +1781,13 @@ object ScaleBench {
             sum(when(col("rank_pico") > 0, 1L).otherwise(0L))).head()
           (r.getLong(0), r.getLong(1))
         }
-        val m1 = best2("x9_mis", "target/sf01rw", misAgg)
-        val m10 = best2("x9_mis", "target/sf1", misAgg)
+        val m1 = tier("x9_mis", "target/sf01rw", misAgg)
+        val m10 = tier("x9_mis", "target/sf1", misAgg)
         require(m10._2 >= 8 * m1._2 && m10._3 >= 8 * m1._3,
           s"disjoint replicas: MIS size must track the tier: " +
             s"${m1._2}/${m1._3} -> ${m10._2}/${m10._3}")
-        val p1 = best2("x9_ppr", "target/sf01rw", pprAgg)
-        val p10 = best2("x9_ppr", "target/sf1", pprAgg)
+        val p1 = tier("x9_ppr", "target/sf01rw", pprAgg)
+        val p10 = tier("x9_ppr", "target/sf1", pprAgg)
         require(p10._2 >= 8 * p1._2,
           s"seed count must track the tier: ${p1._2} -> ${p10._2}")
         def js(t: (Double, Long, Long), k1: String, k2: String): String =
@@ -2061,20 +1819,15 @@ object ScaleBench {
             count(lit(1))).head()
           (r.getLong(0), r.getLong(1))
         }
-        def best2(dir: String, msg: Boolean): (Double, Long, Long) = {
-          def once: (Double, Long, Long) = {
-            val t0 = System.nanoTime()
-            val (a, b) = misCount(
-              graft.queries.Parity77.misQ(spark, dir, msg))
-            ((System.nanoTime() - t0) / 1e9, a, b)
-          }
-          val x = once; val y = once
-          if (x._1 <= y._1) x else y
+        def arm(dir: String, msg: Boolean): (Double, Long, Long) = {
+          val ((a, b), sec) =
+            best(2)(misCount(graft.queries.Parity77.misQ(spark, dir, msg)))
+          (sec, a, b)
         }
         val parts = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
           case (c, dir) =>
-            val b = best2(dir, msg = false)
-            val m = best2(dir, msg = true)
+            val b = arm(dir, msg = false)
+            val m = arm(dir, msg = true)
             require(b._2 == m._2 && b._3 == m._3,
               s"arms disagree at x$c: broadcast ${b._2}/${b._3} vs " +
                 s"msg ${m._2}/${m._3}")
@@ -2092,23 +1845,14 @@ object ScaleBench {
       // reading: 100x the rows, same restore/clone cost).
       if (blockOn("restore_clone")) locally {
         import graft.sources.VersionedTable
-        def clean(p: String): Unit = {
-          val path = new org.apache.hadoop.fs.Path(p)
-          val f = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (f.exists(path)) f.delete(path, true)
-        }
         def dataGroups(p: String): Int =
           Option(new java.io.File(p, "data").list()).map(_.length)
             .getOrElse(0)
-        def timed[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val a = f
-          (a, (System.nanoTime() - t0) / 1e9)
-        }
         val out = Seq(1L, 10L, 100L).map { c =>
           val rows = 100000L * c
           val p = s"target/rc_src_$c"
           val dst = s"target/rc_dst_$c"
-          clean(p); clean(dst)
+          rmrf(spark, p); rmrf(spark, dst)
           // 8 contiguous-range commits so stats-pruned paths stay
           // exercised on the clone
           var v = 0L
@@ -2120,12 +1864,12 @@ object ScaleBench {
               v, statsCol = Some("k"))
           }
           val groupsBefore = dataGroups(p)
-          val (_, restoreSec) = timed(VersionedTable.restore(spark, p, 4L))
+          val (_, restoreSec) = secs(VersionedTable.restore(spark, p, 4L))
           require(dataGroups(p) == groupsBefore,
             "restore staged data — must be metadata-only")
           val srcAbs = new java.io.File(p).getAbsolutePath
           val (_, cloneSec) =
-            timed(VersionedTable.cloneShallow(spark, srcAbs, dst))
+            secs(VersionedTable.cloneShallow(spark, srcAbs, dst))
           require(dataGroups(dst) == 0,
             "shallow clone copied data — must be zero-copy")
           // the clone must actually read (plan-time check only: one

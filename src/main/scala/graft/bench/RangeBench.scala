@@ -2,13 +2,14 @@ package graft.bench
 
 import graft.{GraftSession, Tables}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType}
 
 /** Measured range-join demo: the same point-in-interval join run
-  * (a) naively — no equi key, so Spark plans BroadcastNestedLoopJoin
-  * (O(points × intervals) comparisons) — and (b) through
+  * (a) naively — no equi key, so stock Spark plans
+  * BroadcastNestedLoopJoin (O(points × intervals) comparisons) — and
+  * (b) through
   * [[graft.ops.RangeJoin.pointInInterval]]'s binned equi-join.
   *
   * The workload: every order date (150k points at sf0.1) against
@@ -53,16 +54,10 @@ object RangeBench {
       joined.groupBy(col("i_orderkey"))
         .agg(count(lit(1)).as("n_points")).count()
 
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-
     // warm the scans so both variants pay the same I/O
     points.count(); intervals.count()
 
-    val (binnedSec, nBinned) = time(agg(
+    val (nBinned, binnedSec) = Timing.secs(agg(
       graft.ops.RangeJoin.pointInInterval(points, "p_d", intervals,
         "lo_d", "hi_d", 8L)))
     // the rule's auto width: median span over a 4096-row prefix sample
@@ -74,12 +69,20 @@ object RangeBench {
         .collect().map(_.getLong(0)).sorted
       math.max(1L, spans(spans.length / 2))
     }
-    val (autoSec, nAuto) = time(agg(
+    val (nAuto, autoSec) = Timing.secs(agg(
       graft.ops.RangeJoin.pointInInterval(points, "p_d", intervals,
         "lo_d", "hi_d", autoWidth)))
-    val (naiveSec, nNaive) = time(agg(
-      points.join(intervals,
-        col("p_d") >= col("lo_d") && col("p_d") <= col("hi_d"))))
+    // the stock arm: on the factory session RangeJoinRewriteRule would
+    // bin this join too, so it runs with the rule's off switch
+    val (nNaive, naiveSec) = Timing.withConf(spark,
+        graft.plans.RangeJoinRewriteRule.WidthConf -> "0") {
+      val joined = points.join(intervals,
+        col("p_d") >= col("lo_d") && col("p_d") <= col("hi_d"))
+      val plan = joined.queryExecution.executedPlan.toString
+      require(plan.contains("BroadcastNestedLoopJoin"),
+        s"stock arm must plan the nested loop:\n$plan")
+      Timing.secs(agg(joined))
+    }
     require(nBinned == nNaive, s"row mismatch: $nBinned vs $nNaive")
     require(nAuto == nNaive, s"auto-width row mismatch: $nAuto vs $nNaive")
 

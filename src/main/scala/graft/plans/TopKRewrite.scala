@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * into the heap-based [[TopKPerKeyNode]] — same single shuffle, but
   * O(n log k) bounded-heap work instead of a full O(n log n) partition
-  * sort (1.9x at sf0.1, growing with rows-per-key; see TopKBench).
+  * sort (growing with rows-per-key; `graft.TopKBench` times both
+  * plans, running the stock window with this rule excluded).
   *
   * Fires only when the rewrite is airtight:
   *  - the Window computes exactly ONE expression: row_number() over a
@@ -34,6 +35,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * numbers; we unwrap it and take over the whole job.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] {
+
+  /** The session conf that switches this rule off: what an A/B arm
+    * timing the stock window plan runs under. */
+  val Off: (String, String) = "spark.sql.optimizer.excludedRules" -> ruleName
 
   private def bound(cond: Expression, rn: ExprId): Option[Int] = cond match {
     case LessThanOrEqual(a: AttributeReference, Literal(k: Int, _))

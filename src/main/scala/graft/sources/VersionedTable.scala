@@ -1928,7 +1928,9 @@ object VersionedTable {
     * Time travel to a pre-rename version shows the old names.
     * Caveat (Delta's, too): a DROPPED logical name stays masked for
     * every group generation, so re-using it for a new column is
-    * undefined — pick a fresh name. Throws
+    * undefined — pick a fresh name. CHECK constraints carry over; a
+    * rename that would leave one unresolvable (it names `oldName`) is
+    * refused with the constraint named — `dropCheck` it first. Throws
     * [[CommitConflictException]] on a lost race (nothing staged). */
   def renameColumn(spark: SparkSession, path: String,
       oldName: String, newName: String): Long = {
@@ -1936,22 +1938,41 @@ object VersionedTable {
     val snap = snapshot(spark, path)
     require(snap.version >= 1, "rename on an empty table")
     val st = snap.schema
-    val cols = readSnapshot(spark, path, snap).get.schema.fieldNames.toSet
+    val now = readSnapshot(spark, path, snap).get
+    val cols = now.schema.fieldNames.toSet
     require(cols(oldName), s"column $oldName does not exist (have: " +
       cols.mkString(", ") + ")")
     require(!cols(newName), s"column $newName already exists")
+    requireChecksResolve(spark, st, now.withColumnRenamed(oldName, newName),
+      s"renaming column $oldName")
     val ren = (st.renames.map { case (p, l) =>
       if (l == oldName) (p, newName) else (p, l)
     } :+ (oldName -> newName)).filter(pl => pl._1 != pl._2).distinct
     commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("rename_column"),
-      schema = Some(SchemaState(ren, st.drops)))
+      schema = Some(st.copy(renames = ren)))
+  }
+
+  /** Every live CHECK must still resolve against the logical schema
+    * a rename or drop leaves (`next`): resolved on an empty frame of
+    * that schema, so nothing is read. */
+  private def requireChecksResolve(spark: SparkSession, st: SchemaState,
+      next: DataFrame, verb: String): Unit = {
+    lazy val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), next.schema)
+    st.checks.foreach { case (nm, ex) =>
+      require(scala.util.Try(empty.filter(ex).queryExecution.assertAnalyzed())
+          .isSuccess,
+        s"$verb would leave check constraint '$nm' ($ex) unresolvable " +
+          s"— dropCheck '$nm' first")
+    }
   }
 
   /** DROP COLUMN, metadata-only: the column is masked at read time
     * for every group generation — zero data rewritten, and time
     * travel to a pre-drop version still shows it. See
-    * [[renameColumn]] for the name-reuse caveat. Dropping the key
+    * [[renameColumn]] for the name-reuse caveat and for CHECK
+    * constraints (a drop that strands one is refused). Dropping the key
     * column a LIVE deletion vector is keyed on is refused: the DV
     * anti-join needs that column on both sides, so the drop would
     * break every read of the group (and the rewrite paths that could
@@ -1962,9 +1983,12 @@ object VersionedTable {
     val snap = snapshot(spark, path)
     val Snapshot(v, live, st) = snap
     require(v >= 1, "drop on an empty table")
-    val cols = readSnapshot(spark, path, snap).get.schema.fieldNames.toSet
+    val now = readSnapshot(spark, path, snap).get
+    val cols = now.schema.fieldNames.toSet
     require(cols(colName), s"column $colName does not exist")
     require(cols.size > 1, "cannot drop the table's last column")
+    requireChecksResolve(spark, st, now.drop(colName),
+      s"dropping column $colName")
     live.foreach { g =>
       g.dv.foreach { d =>
         // one footer read per live DV: the sidecar's single column,
@@ -1980,7 +2004,7 @@ object VersionedTable {
     }
     commitEntry(spark, path, snap, live,
       replace = true, staged = Seq.empty, op = Some("drop_column"),
-      schema = Some(SchemaState(st.renames, st.drops :+ colName)))
+      schema = Some(st.copy(drops = st.drops :+ colName)))
   }
 
   /** CONVERT TO (the Delta `CONVERT TO DELTA` idea): adopt an

@@ -91,10 +91,16 @@ class ExtensionsSpec extends AnyFunSuite {
       val optimized = rewritten.queryExecution.optimizedPlan.toString
       assert(optimized.contains("TopKPerKey"), optimized)
       assert(!optimized.contains("Window"), optimized)
-      // identical rows vs the plain-session window formulation
+      // identical rows vs the stock window formulation: the shared
+      // session carries the extensions too, so the reference runs with
+      // the rule excluded and must plan the Window itself
       val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = latestPerKey(base).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val want = bench.Timing.withConf(base, plans.TopKRewriteRule.Off) {
+        val stock = latestPerKey(base)
+        val plan = stock.queryExecution.optimizedPlan.toString
+        assert(plan.contains("Window") && !plan.contains("TopKPerKey"), plan)
+        stock.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
       assert(got == want)
 
       // keeping rn in the output must PREVENT the rewrite

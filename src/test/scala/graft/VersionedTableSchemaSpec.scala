@@ -171,6 +171,39 @@ class VersionedTableSchemaSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, p, Some(v1)).isDefined)
   }
 
+  test("CHECK constraints survive renaming and dropping an unrelated " +
+      "column; renaming or dropping a constrained column is refused " +
+      "NAMING the constraint") {
+    val p = tmp()
+    import spark.implicits._
+    VersionedTable.commit(spark, p,
+      Seq((1L, 10L, "a", "x")).toDF("k", "pay", "tag", "note"), 0L)
+    VersionedTable.addCheck(spark, p, "pay_pos", "pay >= 0")
+    VersionedTable.renameColumn(spark, p, "tag", "label")
+    VersionedTable.dropColumn(spark, p, "note")
+    assert(VersionedTable.snapshot(spark, p).schema.checks ==
+      Seq("pay_pos" -> "pay >= 0"))
+    val err = intercept[IllegalArgumentException] {
+      VersionedTable.commit(spark, p, Seq((2L, -5L, "b")).toDF("k", "pay", "label"),
+        VersionedTable.currentVersion(spark, p))
+    }
+    assert(err.getMessage.contains("pay_pos"), err.getMessage)
+    val head = VersionedTable.currentVersion(spark, p)
+    Seq(
+      () => VersionedTable.renameColumn(spark, p, "pay", "amount"),
+      () => VersionedTable.dropColumn(spark, p, "pay")).foreach { verb =>
+      val refused = intercept[IllegalArgumentException](verb())
+      assert(refused.getMessage.contains("pay_pos"), refused.getMessage)
+    }
+    assert(VersionedTable.currentVersion(spark, p) == head,
+      "a refused rename/drop commits nothing")
+    // once the constraint is dropped, the column can be renamed
+    VersionedTable.dropCheck(spark, p, "pay_pos")
+    VersionedTable.renameColumn(spark, p, "pay", "amount")
+    assert(VersionedTable.read(spark, p).get.columns.toSeq ==
+      Seq("k", "amount", "label"))
+  }
+
   test("CHECK treats non-true as a violation: a NULL in the " +
       "constrained column refuses the batch AND blocks addCheck on " +
       "existing data (Delta semantics, not ANSI null-passes)") {
